@@ -5,36 +5,28 @@ sf0.001; ``queries``/``oracle_sql`` expose each implemented operator
 from SURVEY.md §2 with a DuckDB-equivalent oracle.
 
 Registry order matters: the driver's correctness artifact records the
-FIRST 50 entries, so every entry of unique value (core relational
-plane, indexed retrieval modes incl. the true-BMW extension,
-codec-family decode-equality unions covering all 16 reference index
-types, the 22 training/event-pipeline operators) sits inside that
-window; only the rows-only ANS stats twins (independently pinned by
-pytest — tests/test_decode_kinds.py, tests/test_stats_pinned.py) sit
-past it.  Per-codec decode twins are collapsed into three
-family-union entries, the WAND twins (incl. true BMW and the
-doc-partitioned shape) into ``wand_family``, the MaxScore twins into
-``maxscore_family``, the EF-family WAND twins into one, the two IVF
-ANN twins into one, and the docpart / indexed ranked twin pairs into
-one union each (same oracle strength, fewer slots; the round-4
+FIRST 50 entries.  The registry holds 32, so every entry sits inside
+that window; the rows-only ANS stats twins (independently pinned by
+pytest — tests/test_decode_kinds.py, tests/test_stats_pinned.py) stay
+last by convention.  Per-codec decode twins are collapsed into three
+family-union entries covering all 16 reference index types, the WAND
+twins (incl. true BMW and the doc-partitioned shape) into
+``wand_family``, the MaxScore twins into ``maxscore_family``, the
+EF-family WAND twins into one, and the docpart / indexed ranked twin
+pairs into one union each (same oracle strength, fewer entries; the
 retrieval extensions ride those unions too — PRF query expansion as
 ``ranked_indexed_family`` mode ``rm3``, did-you-mean spell correction
 as its mode ``fuzzy``, more-like-this as its mode ``mlt``,
 field-collapsed diversified top-k as ``ranked_docpart_family`` mode
 ``collapse``; the two boolean execution substrates as
-``bool_engines_family``, whose freed slot gates prefix autocomplete
-``suggest_top``; ``hybrid_rrf_topk`` is a brute+ivf variant union
-gating the IVF-probe dense leg) — 53 entries
-total: the first 50 are ALL oracle-hashed (transform_queries via the
-pinned Porter stem table, functions/stem_fixture.py;
-ranked_deleted_top10 / ranked_filtered_top10 gate the two masking
-polarities; the pruned TAAT twin rides in ranked_indexed_family;
-neardup_clusters gates the connected-components closure against a
-DuckDB recursive-CTE oracle; hybrid_rrf_topk gates sparse+dense
-reciprocal-rank fusion; phrase_match_counts / phrase_ranked_top10
-gate shingle-index phrase retrieval; decontaminate /
-stratified_sample gate the training-mix hygiene plane), the 3
-past-window ones rows-only.
+``bool_engines_family``; prefix autocomplete as ``suggest_top``).
+29 entries are oracle-hashed: ranked_deleted_top10 /
+ranked_filtered_top10 gate the two masking polarities; the pruned
+TAAT twin rides in ranked_indexed_family; phrase_match_counts /
+phrase_ranked_top10 gate shingle-index phrase retrieval; corpus_sha
+gates the per-row sha256 content invariant; transform_queries goes
+through the pinned Porter stem table (functions/stem_fixture.py).  The
+last 3 are rows-only.
 """
 
 from __future__ import annotations
@@ -47,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from partitioned_ef_ans_spark import gate, gate_training  # noqa: E402
+from partitioned_ef_ans_spark import gate  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -88,9 +80,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "index_decode_flat_ef_family": gate.q_index_decode_flat_ef_family,
         "index_decode_flat_ans_family": gate.q_index_decode_flat_ans_family,
         "index_decode_flat_block_family": gate.q_index_decode_flat_block_family,
-        # ---- training-data pipeline (24)
-        **gate_training.TRAINING_QUERIES,
-        # ---- rows-only ANS stats twins (pytest-pinned; past-window OK)
+        # ---- sha invariant + query transformer (3)
+        "corpus_sha": gate.q_corpus_sha,
+        "transform_queries": gate.q_transform_queries,
+        "transform_queries_uids": gate.q_transform_queries_uids,
+        # ---- rows-only ANS stats twins (pytest-pinned)
         "index_stats": gate.q_index_stats,
         "index_block_stats": gate.q_index_block_stats,
         "index_decode_kinds": gate.q_index_decode_kinds,
@@ -136,5 +130,10 @@ def oracle_sql() -> dict[str, str]:
         "index_decode_flat_block_family": gate.sql_decode_flat_union(
             gate.BLOCK_FAMILY_CODECS
         ),
-        **gate_training.TRAINING_ORACLES,
+        "corpus_sha": gate.sql_corpus_sha(),
+        # transform_queries: hashed via the pinned stem table (DuckDB has
+        # no Porter stemmer; functions/stem_fixture.py is pytest-locked to
+        # a live recomputation over the actual corpus vocabulary)
+        "transform_queries": gate.sql_transform_queries(),
+        "transform_queries_uids": gate.sql_transform_queries_uids(),
     }

@@ -833,319 +833,6 @@ def merge_mode():
     print(json.dumps(out))
 
 
-def decontam_mode():
-    """`bench.py --decontam`: scan-vs-index decontamination economics.
-
-    A pretraining pipeline re-decontaminates whenever the eval suite
-    changes; the corpus doesn't.  The corpus-scan operator pays
-    O(corpus tokenize + shingle) EVERY refresh; contamination_via_index
-    pays the shingle-index build ONCE and then each refresh reads only
-    the posting lists the eval set's shingles reference.  Legs:
-
-    * ``scan_s`` / ``scan_refresh_s`` — corpus scan, eval sets A / B;
-    * ``build_s`` — one-time width-3 shingle index build;
-    * ``index_s`` / ``index_refresh_s`` — via-index, eval sets A / B;
-    * equality spot-check: scan and index agree on (rows, Σn_hit) for
-      eval set A.
-
-    The claim being measured: refresh cost via index ≪ refresh cost
-    via scan, so the build amortizes after a few eval-suite updates.
-    One JSON line, persisted to BENCH_DECONTAM.json.
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark import corpus as c_mod
-    from partitioned_ef_ans_spark.index import build as b_mod
-    from partitioned_ef_ans_spark.operators import decontam as dc_mod
-    from partitioned_ef_ans_spark.session import get_spark
-
-    n_synth = int(os.environ.get("PEFA_DECONTAM_DOCS", "100000"))
-    eval_mod = int(os.environ.get("PEFA_DECONTAM_EVAL_MOD", "997"))
-    cpus = int(os.environ.get("PEFA_DECONTAM_CPUS", "8"))
-    ngram, min_ov = 3, 0.5
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=4 * cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    real = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    n_real = real.count()
-    synth = c_mod.synthesize_corpus_distributed(
-        spark, n_synth, vocab_size=20000, num_partitions=2 * cpus
-    ).select(
-        (F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
-         + F.lit(n_real)).alias("doc_id"),
-        F.col("content").alias("text"),
-    )
-    docs = real.unionByName(synth).cache()
-    n_docs = docs.count()
-
-    def eval_set(offset: int):
-        return docs.where(F.col("doc_id") % eval_mod == offset).select(
-            F.col("doc_id").alias("eval_id"), "text"
-        )
-
-    def timed(fn):
-        t0 = time.perf_counter()
-        r = fn()
-        return time.perf_counter() - t0, r
-
-    def scan_stats(ev):
-        df = dc_mod.contamination(docs, ev, n=ngram, min_overlap=min_ov)
-        row = df.agg(
-            F.count("*").alias("c"), F.sum("n_hit").alias("s")
-        ).collect()[0]
-        return int(row["c"]), int(row["s"] or 0)
-
-    # n-refresh series (the amortization curve is the whole claim: one
-    # eval set only extrapolates it) — eval set r = docs where
-    # doc_id % eval_mod == r, a fresh suite per refresh
-    n_refresh = max(2, int(os.environ.get("PEFA_DECONTAM_REFRESHES", "4")))
-    evals = [eval_set(r) for r in range(n_refresh)]
-    scan_series, scan_results = [], []
-    for ev in evals:
-        s, res = timed(lambda ev=ev: scan_stats(ev))
-        scan_series.append(round(s, 3))
-        scan_results.append(res)
-    rows_a, sum_a = scan_results[0]
-    scan_s, scan_refresh_s = scan_series[0], scan_series[1]
-
-    idx_dir = f"/dev/shm/pefa_decontam_{os.getpid()}"
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    # resumable layout (num_parts in the manifest) — the delta-update
-    # leg below requires it, exactly like test_via_index_after_delta_update
-    from partitioned_ef_ans_spark.index.checkpoint import (
-        build_index_resumable,
-    )
-
-    build_s, _ = timed(lambda: build_index_resumable(
-        spark, docs, idx_dir, codec="ans", num_parts=16,
-        chunk_postings=1 << 14, doc_col="doc_id", text_col="text",
-        ngram=ngram,
-    ))
-    index_df, _s, term_stats, codec_obj, man = b_mod.load_index(
-        spark, idx_dir
-    )
-    index_df = index_df.cache()
-    index_df.count()
-
-    def index_stats(ev):
-        df = dc_mod.contamination_via_index(
-            spark, index_df, ev, codec_obj, n=ngram, min_overlap=min_ov,
-            term_stats_df=term_stats, index_ngram=man["ngram"],
-        )
-        row = df.agg(
-            F.count("*").alias("c"), F.sum("n_hit").alias("s")
-        ).collect()[0]
-        return int(row["c"]), int(row["s"] or 0)
-
-    index_series = []
-    for r, ev in enumerate(evals):
-        s, res = timed(lambda ev=ev: index_stats(ev))
-        index_series.append(round(s, 3))
-        assert res == scan_results[r], (
-            f"refresh {r}: scan {scan_results[r]} != index {res}"
-        )
-    index_s, index_refresh_s = index_series[0], index_series[1]
-
-    # delta-update leg: append a batch through update_index_delta and
-    # show the via-index refresh stays exact AND cheap on the stacked
-    # index (the LSM claim the pytest pins at small scale, timed here)
-    n_delta = int(os.environ.get("PEFA_DECONTAM_DELTA_DOCS", "2000"))
-    from partitioned_ef_ans_spark.index.checkpoint import update_index_delta
-
-    delta = c_mod.synthesize_corpus_distributed(
-        spark, n_delta, vocab_size=20000, num_partitions=cpus, seed=777
-    ).select(
-        (F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
-         + F.lit(n_docs)).alias("doc_id"),
-        F.col("content").alias("text"),
-    ).cache()
-    delta.count()
-    delta_update_s, _ = timed(lambda: update_index_delta(
-        spark, idx_dir, delta, doc_col="doc_id", text_col="text",
-    ))
-    # the pre-delta cache MUST go before re-reading the same path:
-    # Spark's CacheManager matches parquet scans by canonicalized plan
-    # (path+schema), so a fresh spark.read.parquet(idx_dir) would be
-    # served from the stale cached relation and miss the delta segment
-    index_df.unpersist(blocking=True)
-    spark.catalog.refreshByPath(idx_dir)
-    index_df2, _s2, term_stats2, codec2, man2 = b_mod.load_index(
-        spark, idx_dir
-    )
-    index_df2 = index_df2.cache()
-    index_df2.count()
-    docs2 = docs.unionByName(delta)
-    ev0_2 = docs2.where(F.col("doc_id") % eval_mod == 0).select(
-        F.col("doc_id").alias("eval_id"), "text"
-    )
-
-    def index_stats2(ev):
-        df = dc_mod.contamination_via_index(
-            spark, index_df2, ev, codec2, n=ngram, min_overlap=min_ov,
-            term_stats_df=term_stats2, index_ngram=man2["ngram"],
-        )
-        row = df.agg(
-            F.count("*").alias("c"), F.sum("n_hit").alias("s")
-        ).collect()[0]
-        return int(row["c"]), int(row["s"] or 0)
-
-    def scan_stats2(ev):
-        df = dc_mod.contamination(docs2, ev, n=ngram, min_overlap=min_ov)
-        row = df.agg(
-            F.count("*").alias("c"), F.sum("n_hit").alias("s")
-        ).collect()[0]
-        return int(row["c"]), int(row["s"] or 0)
-
-    index_delta_refresh_s, post = timed(lambda: index_stats2(ev0_2))
-    _scan2_s, post_scan = timed(lambda: scan_stats2(ev0_2))
-    assert post == post_scan, (
-        f"post-delta: index {post} != scan {post_scan}"
-    )
-
-    mean_scan = sum(scan_series) / len(scan_series)
-    mean_index = sum(index_series) / len(index_series)
-    out = {
-        "metric": "decontam_scan_vs_index",
-        "unit": "sec",
-        "num_docs": n_docs,
-        "eval_items": evals[0].count(),
-        "postings": man["total_postings"],
-        "contaminated_pairs": rows_a,
-        "queries": {
-            "scan_s": round(scan_s, 3),
-            "scan_refresh_s": round(scan_refresh_s, 3),
-            "build_s": round(build_s, 3),
-            "index_s": round(index_s, 3),
-            "index_refresh_s": round(index_refresh_s, 3),
-            "refresh_speedup": round(scan_refresh_s / index_refresh_s, 2),
-            "delta_update_s": round(delta_update_s, 3),
-            "index_delta_refresh_s": round(index_delta_refresh_s, 3),
-        },
-        "refresh_series": {
-            "n_refreshes": n_refresh,
-            "scan_s": scan_series,
-            "index_s": index_series,
-            "mean_scan_refresh_s": round(mean_scan, 3),
-            "mean_index_refresh_s": round(mean_index, 3),
-            "mean_speedup": round(mean_scan / mean_index, 2),
-            # refreshes until the one-time shingle-index build is paid
-            # back by per-refresh savings
-            "build_amortizes_after": round(
-                build_s / max(mean_scan - mean_index, 1e-9), 2
-            ),
-        },
-        "sf": SF_DIR,
-        "cpus": cpus,
-    }
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    with open(Path(__file__).resolve().parent / "BENCH_DECONTAM.json",
-              "w") as fh:
-        json.dump(out, fh)
-    spark.stop()
-    print(json.dumps(out))
-
-
-def mix_mode():
-    """`bench.py --mix`: training-mix pipeline wall at two parallelism
-    levels on the same input (the north rule's two-cluster-size
-    criterion evidenced as local[2] vs local[8]) plus a one-off
-    neardup-dedup leg.
-
-    Corpus = sf docs + PEFA_MIX_DOCS synth docs with a deterministic
-    stratum column; eval = every 997th doc.  Each leg runs the full
-    quality → dedup → decontam → rate-sample chain and aggregates
-    (count, Σtokens); per-leg timing is the min of 2 in-session reps
-    (first rep pays the JIT tax — see CLAUDE.md).  One JSON line,
-    persisted to BENCH_MIX.json.
-    """
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark import corpus as c_mod
-    from partitioned_ef_ans_spark.operators import mix as m_mod
-    from partitioned_ef_ans_spark.session import get_spark
-
-    n_synth = int(os.environ.get("PEFA_MIX_DOCS", "30000"))
-    eval_mod = 997
-    langs = ("en", "de", "es", "fr", "zh")
-    rates = {"en": 0.5, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
-    reps = int(os.environ.get("PEFA_MIX_REPS", "2"))
-    n_docs = 0
-
-    def load(spark, cpus):
-        real = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        n_real = real.count()
-        synth = c_mod.synthesize_corpus_distributed(
-            spark, n_synth, vocab_size=20000, num_partitions=2 * cpus
-        ).select(
-            (F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
-             + F.lit(n_real)).alias("doc_id"),
-            F.col("content").alias("text"),
-        )
-        docs = real.unionByName(synth).withColumn(
-            "lang",
-            F.element_at(
-                F.array(*[F.lit(l) for l in langs]),
-                (F.pmod(F.col("doc_id"), F.lit(len(langs))) + 1).cast("int"),
-            ),
-        ).cache()
-        nonlocal n_docs
-        n_docs = docs.count()
-        ev = docs.where(F.col("doc_id") % eval_mod == 0).select(
-            F.col("doc_id").alias("eval_id"), "text"
-        )
-        return docs, ev
-
-    def leg(cpus, dedup):
-        spark = get_spark(master=f"local[{cpus}]",
-                          shuffle_partitions=4 * cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        docs, ev = load(spark, cpus)
-        best, sel_stats = None, None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            row = m_mod.training_mix(
-                docs, ev, rates, quality_min=0.6, n=3, max_overlap=0.5,
-                dedup=dedup,
-            ).agg(
-                F.count("*").alias("c"),
-                F.sum(F.length("text")).alias("b"),
-            ).collect()[0]
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            sel_stats = (int(row["c"]), int(row["b"] or 0))
-        spark.stop()
-        return best, sel_stats
-
-    t2, s2 = leg(2, "exact")
-    t8, s8 = leg(8, "exact")
-    assert s2 == s8, f"parallelism changed the mix: {s2} != {s8}"
-    tnd, _snd = leg(8, "neardup")
-    eff = (t2 / t8) / 4.0
-    out = {
-        "metric": "training_mix_wall",
-        "unit": "sec",
-        "num_docs": n_docs,
-        "selected_docs": s8[0],
-        "queries": {
-            "mix_2c_s": round(t2, 3),
-            "mix_8c_s": round(t8, 3),
-            "scaling_eff_2to8": round(eff, 3),
-            "mix_neardup_8c_s": round(tnd, 3),
-        },
-        "sf": SF_DIR,
-        "synth_docs": n_synth,
-    }
-    with open(Path(__file__).resolve().parent / "BENCH_MIX.json",
-              "w") as fh:
-        json.dump(out, fh)
-    print(json.dumps(out))
-
-
 def sharded_mode():
     """`bench.py --sharded`: scatter-gather serving economics — N shard
     indexes queried through run_ranked_sharded (global stats, per-shard
@@ -1322,576 +1009,7 @@ def codecs_mode():
     print(json.dumps(out))
 
 
-def ann_mode():
-    """Embedding-plane bench: dense retrieval kernels over a
-    deterministic synthetic embedding table (PEFA_ANN_VECS vectors,
-    dim 64, values hash-derived in [-1, 1]; Q external queries drawn
-    from the corpus).  Legs (interleaved reps, min per leg):
-
-      - brute_hof     dense_topk_for_queries: crossJoin + interpreted
-                      HOF fold (the exactness oracle shape)
-      - brute_np      dense_topk_np: Arrow mapInPandas + BLAS matmul,
-                      per-batch partial top-k (the production brute)
-      - brute_np_sq8  + int8 in-batch prefilter, exact rescore
-      - ivf           ivf_dense_topk with centroids/assignment/salts
-                      precomputed (amortized; assign timed separately)
-      - ivf_sq8       + int8 candidate prefilter
-      - ivf_store     served from the PERSISTED store (ann_store.py;
-                      build timed separately; must equal ivf exactly)
-
-    Recalls are vs brute_np (exact).  One JSON line ->
-    BENCH_ANN.json."""
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark.operators import ann as ann_mod
-    from partitioned_ef_ans_spark.operators import hybrid as h_mod
-    from partitioned_ef_ans_spark.operators.dedup import bucket_salts
-    from partitioned_ef_ans_spark.session import get_spark
-
-    n_vecs = int(os.environ.get("PEFA_ANN_VECS", "50000"))
-    n_q = int(os.environ.get("PEFA_ANN_QUERIES", "100"))
-    dim = int(os.environ.get("PEFA_ANN_DIM", "64"))
-    k = 10
-    nprobe = int(os.environ.get("PEFA_ANN_NPROBE", "8"))
-    reps = int(os.environ.get("PEFA_ANN_REPS", "2"))
-    cpus = int(os.environ.get("PEFA_ANN_CPUS", "8"))
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=4 * cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    path = f"/dev/shm/pefa_ann_vecs_{n_vecs}_{dim}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        # deterministic synthetic embeddings: component = signed
-        # fraction of xxhash64(vec_id:i) — no RNG, identical across
-        # runs and parallelism levels
-        spark.range(n_vecs).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: (
-                    (
-                        F.pmod(
-                            F.xxhash64(F.concat_ws(":", F.col("id"), i)),
-                            F.lit(2000001),
-                        )
-                        - F.lit(1000000)
-                    )
-                    / F.lit(1000000.0)
-                ).cast("float"),
-            ).alias("embedding"),
-        ).repartition(2 * cpus).write.mode("overwrite").parquet(path)
-    embs = spark.read.parquet(path).cache()
-    embs.count()
-    qv = (
-        embs.where(F.col("vec_id") % (n_vecs // n_q) == 0)
-        .orderBy("vec_id")
-        .limit(n_q)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .cache()
-    )
-    qv.count()
-
-    # amortized IVF prep (persisted alongside the embeddings at scale):
-    # centroid resolve + corpus assignment + hot-bucket salts
-    t0 = time.perf_counter()
-    n_cent = ann_mod.auto_n_centroids(n_vecs)
-    cent = spark.createDataFrame(
-        embs.orderBy("vec_id").limit(n_cent).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cvec"),
-        ).collect()
-    )
-    assignments = ann_mod.assign_buckets(embs, cent, engine="np").cache()
-    assignments.count()
-    salts = spark.createDataFrame(
-        bucket_salts(assignments.groupBy("bucket").count(), 1 << 14).collect()
-    )
-    quantized = ann_mod.sq8_quantize(embs).cache()
-    quantized.count()
-    pq_cb = spark.createDataFrame(
-        ann_mod.pq_codebooks(embs, m=8, ks=16).collect()
-    )
-    pq_codes = ann_mod.pq_encode(embs, pq_cb, m=8).cache()
-    pq_codes.count()
-    t_assign = time.perf_counter() - t0
-
-    # persisted-store twin of the same prep: everything above frozen
-    # to parquet once (index/ann_store.py), then served cold from disk
-    # — the shape a real deployment uses (prep survives the session)
-    from partitioned_ef_ans_spark.index import ann_store
-
-    store_dir = f"/dev/shm/pefa_ann_store_{n_vecs}_{dim}"
-    if not os.path.exists(f"{store_dir}/manifest.json"):
-        t0 = time.perf_counter()
-        ann_store.build_ann_index(
-            spark, embs, store_dir, n_centroids=n_cent, trained=False,
-            sq8=True, pq=False, engine="np", source=path,
-        )
-        t_store_build = time.perf_counter() - t0
-    else:
-        # a store from an earlier run survives on shm — recording ~0 s
-        # would pass off a cache hit as a measured build cost
-        t_store_build = None
-    store_idx = ann_store.load_ann_index(spark, store_dir)
-
-    legs = {
-        "brute_hof": lambda: h_mod.dense_topk_for_queries(qv, embs, k=k),
-        "brute_np": lambda: ann_mod.dense_topk_np(qv, embs, k=k),
-        "brute_np_sq8": lambda: ann_mod.dense_topk_np(
-            qv, embs, k=k, quant="sq8", rescore_mult=4
-        ),
-        "ivf": lambda: ann_mod.ivf_dense_topk(
-            qv, embs, k=k, centroids=cent, nprobe=nprobe,
-            assignments=assignments, salts=salts,
-        ),
-        "ivf_sq8": lambda: ann_mod.ivf_dense_topk(
-            qv, embs, k=k, centroids=cent, nprobe=nprobe,
-            assignments=assignments, salts=salts,
-            quant="sq8", rescore_mult=4, quantized=quantized,
-        ),
-        "ivf_np": lambda: ann_mod.ivf_dense_topk(
-            qv, embs, k=k, centroids=cent, nprobe=nprobe,
-            assignments=assignments, salts=salts, engine="np",
-        ),
-        "ivf_sq8_np": lambda: ann_mod.ivf_dense_topk(
-            qv, embs, k=k, centroids=cent, nprobe=nprobe,
-            assignments=assignments, salts=salts,
-            quant="sq8", rescore_mult=4, engine="np",
-        ),
-        "ivf_pq": lambda: ann_mod.ivf_dense_topk(
-            qv, embs, k=k, centroids=cent, nprobe=nprobe,
-            assignments=assignments, salts=salts,
-            quant="pq", rescore_mult=4,
-            pq_codebooks_df=pq_cb, pq_codes_df=pq_codes,
-        ),
-        "ivf_store": lambda: store_idx.query(
-            qv, embs, k=k, nprobe=nprobe, engine="np",
-        ),
-    }
-    times = {name: [] for name in legs}
-    results = {}
-    for _ in range(reps):
-        for name, fn in legs.items():
-            t0 = time.perf_counter()
-            rows = fn().collect()
-            times[name].append(time.perf_counter() - t0)
-            results[name] = rows
-    base = {(r["query_id"], r["doc_id"]) for r in results["brute_np"]}
-
-    def recall(name):
-        got = {(r["query_id"], r["doc_id"]) for r in results[name]}
-        return round(len(got & base) / len(base), 4)
-
-    rec = {
-        "metric": "ann_dense_serving",
-        "value": round(min(times["brute_np"]), 3),
-        "unit": "sec",
-        "n_vecs": n_vecs,
-        "dim": dim,
-        "n_queries": n_q,
-        "k": k,
-        "n_centroids": n_cent,
-        "nprobe": nprobe,
-        "cpus": cpus,
-        "t_ivf_prep_sec": round(t_assign, 3),
-        "t_store_build_sec": (
-            round(t_store_build, 3) if t_store_build is not None else None
-        ),
-        "queries": {n: round(min(t), 3) for n, t in times.items()},
-        "qps": {
-            n: round(n_q / min(t), 1) for n, t in times.items()
-        },
-        "recall_vs_brute": {
-            n: recall(n)
-            for n in (
-                "brute_hof", "brute_np_sq8", "ivf", "ivf_sq8",
-                "ivf_np", "ivf_sq8_np", "ivf_pq", "ivf_store",
-            )
-        },
-        # persisted-store serving must reproduce the in-session IVF
-        # exactly (same pinned centroids; artifacts round-trip parquet)
-        "store_equals_ivf": sorted(map(tuple, results["ivf_store"]))
-        == sorted(map(tuple, results["ivf_np"])),
-    }
-    # recall/cost curve: nprobe is THE serving knob — sweep it on the
-    # store leg up to all-buckets (which must equal brute exactly, the
-    # test-locked identity) so the single-point recall above reads as
-    # a chosen operating point, not a ceiling
-    brute_set = {
-        q: set()
-        for q in {r[0] for r in results["brute_np"]}
-    }
-    for r in results["brute_np"]:
-        brute_set[r[0]].add(r[2])
-    sweep = []
-    for np_probe in (nprobe, 4 * nprobe, n_cent):
-        t0 = time.perf_counter()
-        got = [
-            (r["query_id"], r["rank"], r["doc_id"], r["cos"])
-            for r in store_idx.query(
-                qv, embs, k=k, nprobe=np_probe, engine="np"
-            ).collect()
-        ]
-        dt = time.perf_counter() - t0
-        hit = sum(1 for r in got if r[2] in brute_set.get(r[0], ()))
-        sweep.append(
-            {
-                "nprobe": np_probe,
-                "sec": round(dt, 3),
-                "recall": round(hit / (len(brute_set) * k), 4),
-                "equals_brute": sorted(got)
-                == sorted(map(tuple, results["brute_np"])),
-            }
-        )
-    rec["nprobe_sweep"] = sweep
-    print(json.dumps(rec))
-    with open(Path(__file__).resolve().parent / "BENCH_ANN.json", "w") as fh:
-        json.dump(rec, fh, indent=1)
-    spark.stop()
-
-
-
-def ann_maint_mode():
-    """ANN-store maintenance economics: measure the lifecycle claims
-    the tests only prove for correctness — append is O(batch) not
-    O(index) (vs a full rebuild), deletion is O(tombstones) with free
-    query-time masking, compaction is one bounded fold.  Same
-    deterministic synthetic vectors as --ann; fresh store per run
-    (measuring a build, not a cache hit).  One JSON line ->
-    BENCH_ANN_MAINT.json."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark.index import ann_store
-    from partitioned_ef_ans_spark.session import get_spark
-
-    n_vecs = int(os.environ.get("PEFA_ANN_VECS", "50000"))
-    dim = int(os.environ.get("PEFA_ANN_DIM", "64"))
-    cpus = int(os.environ.get("PEFA_ANN_CPUS", "8"))
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=4 * cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    path = f"/dev/shm/pefa_ann_vecs_{n_vecs}_{dim}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        spark.range(n_vecs).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: (
-                    (
-                        F.pmod(
-                            F.xxhash64(F.concat_ws(":", F.col("id"), i)),
-                            F.lit(2000001),
-                        )
-                        - F.lit(1000000)
-                    )
-                    / F.lit(1000000.0)
-                ).cast("float"),
-            ).alias("embedding"),
-        ).repartition(2 * cpus).write.mode("overwrite").parquet(path)
-    embs = spark.read.parquet(path).cache()
-    embs.count()
-    qv = (
-        embs.where(F.col("vec_id") % 500 == 0)
-        .limit(100)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .cache()
-    )
-    qv.count()
-
-    store = f"/dev/shm/pefa_ann_maint_store_{os.getpid()}"
-    shutil.rmtree(store, ignore_errors=True)
-    cut_small, cut_big = n_vecs - 1200, n_vecs - 1000
-    base = embs.where(F.col("vec_id") < cut_small)
-    batch_small = embs.where(
-        (F.col("vec_id") >= cut_small) & (F.col("vec_id") < cut_big)
-    )
-    batch_big = embs.where(F.col("vec_id") >= cut_big)
-
-    t = {}
-    t0 = time.perf_counter()
-    ann_store.build_ann_index(
-        spark, base, store, trained=False, sq8=True, engine="np",
-    )
-    t["build_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ann_store.add_vectors(spark, store, batch_small, engine="np")
-    t["add_200_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ann_store.add_vectors(spark, store, batch_big, engine="np")
-    t["add_1000_s"] = time.perf_counter() - t0
-
-    idx = ann_store.load_ann_index(spark, store)
-    t0 = time.perf_counter()
-    n_pre = idx.query(qv, embs, k=10, nprobe=8, engine="np").count()
-    t["query_100q_s"] = time.perf_counter() - t0
-
-    dead = [r["vec_id"] for r in embs.select("vec_id").collect()][::50]
-    t0 = time.perf_counter()
-    ann_store.delete_vectors(spark, store, dead)
-    t["delete_1000_s"] = time.perf_counter() - t0
-    idx = ann_store.load_ann_index(spark, store)
-    t0 = time.perf_counter()
-    n_post = idx.query(qv, embs, k=10, nprobe=8, engine="np").count()
-    t["query_100q_masked_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ann_store.compact_ann_index(spark, store)
-    t["compact_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ver = ann_store.verify_ann_index(spark, store)
-    t["verify_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ann_store.repair_ann_index(spark, store)
-    t["repair_noop_s"] = time.perf_counter() - t0
-
-    # near-dup refresh economics: persisted assignments vs in-session
-    # prep.  A CLUSTERED twin table (250 hash centroids + 5% jitter —
-    # uniform hash vectors have ~90° bucket radii, nothing prunes,
-    # which is not the near-dup workload): ids 0..249 are the cluster
-    # prototypes themselves, so the pinned-centroid store buckets one
-    # cluster per centroid.
-    nd_path = f"/dev/shm/pefa_ann_ndvecs_{n_vecs}_{dim}"
-    if not os.path.exists(f"{nd_path}/_SUCCESS"):
-        spark.range(n_vecs).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: ((
-                    (
-                        F.pmod(
-                            F.xxhash64(F.concat_ws(
-                                ":", F.pmod(F.col("id"), F.lit(250)), i
-                            )),
-                            F.lit(2000001),
-                        )
-                        - F.lit(1000000)
-                    ) / F.lit(1000000.0)
-                ) + (
-                    (
-                        F.pmod(
-                            F.xxhash64(F.concat_ws(
-                                ":", F.col("id"), i, F.lit("j")
-                            )),
-                            F.lit(2000001),
-                        )
-                        - F.lit(1000000)
-                    ) / F.lit(20000000.0)
-                )).cast("float"),
-            ).alias("embedding"),
-        ).repartition(2 * cpus).write.mode("overwrite").parquet(nd_path)
-    nd_embs = spark.read.parquet(nd_path).cache()
-    nd_embs.count()
-    nd_store = f"/dev/shm/pefa_ann_nd_store_{os.getpid()}"
-    shutil.rmtree(nd_store, ignore_errors=True)
-    t0 = time.perf_counter()
-    ann_store.build_ann_index(
-        spark, nd_embs, nd_store, n_centroids=250, trained=False,
-        sq8=False, engine="np",
-    )
-    t["nd_store_build_s"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    n_nd_store = ann_store.neardup_via_store(
-        spark, nd_store, nd_embs, threshold=0.9
-    ).count()
-    t["neardup_via_store_s"] = time.perf_counter() - t0
-    from partitioned_ef_ans_spark.operators import dedup as d_mod
-
-    t0 = time.perf_counter()
-    n_nd_sess = d_mod.embedding_neardup_bucketed(
-        nd_embs, threshold=0.9
-    ).count()
-    t["neardup_in_session_s"] = time.perf_counter() - t0
-
-    rec = {
-        "metric": "ann_store_maintenance",
-        "value": round(t["add_1000_s"], 3),
-        "unit": "sec",
-        "n_vecs": n_vecs,
-        "dim": dim,
-        "cpus": cpus,
-        "verify_ok": bool(ver["ok"]),
-        "rows_pre_post_mask": [n_pre, n_post],
-        "queries": {k2: round(v, 3) for k2, v in t.items()},
-        "add_vs_rebuild": round(t["add_1000_s"] / t["build_s"], 4),
-        # both paths are exact -> identical pair sets or the bench lies
-        "neardup_pairs": [n_nd_store, n_nd_sess],
-        "neardup_store_speedup": round(
-            t["neardup_in_session_s"] / t["neardup_via_store_s"], 2
-        ),
-    }
-    print(json.dumps(rec))
-    with open(
-        Path(__file__).resolve().parent / "BENCH_ANN_MAINT.json", "w"
-    ) as fh:
-        json.dump(rec, fh, indent=1)
-    shutil.rmtree(store, ignore_errors=True)
-    shutil.rmtree(nd_store, ignore_errors=True)
-    spark.stop()
-
-
-def hybrid_mode():
-    """End-to-end persisted RAG serving bench: BM25 top-k from the
-    compressed text index + dense top-k from the persisted ANN store,
-    RRF-fused (operators/hybrid.py::hybrid_search_persisted) — the
-    shape a retrieval deployment actually runs.  Both substrates are
-    built ONCE to /dev/shm (timed separately, amortized across every
-    serving batch); text queries are the standard Zipf synth set and
-    each query's dense vector is the embedding of vec_id == query_id.
-    Legs (interleaved reps, min per leg):
-
-      - sparse_only  run_ranked(blockmax) over preloaded index frames
-      - dense_only   the ANN store's IVF probe (engine=np)
-      - hybrid       hybrid_search_persisted end-to-end, INCLUDING
-                     per-call index load from the manifest (the honest
-                     cold-entry cost; the legs above show the split)
-
-    One JSON line -> BENCH_HYBRID.json."""
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark import corpus as c_mod
-    from partitioned_ef_ans_spark.index import ann_store
-    from partitioned_ef_ans_spark.index import build as b_mod
-    from partitioned_ef_ans_spark.index import query as q_mod
-    from partitioned_ef_ans_spark.operators import hybrid as h_mod
-    from partitioned_ef_ans_spark.operators.ranked import queries_to_df
-    from partitioned_ef_ans_spark.session import get_spark
-
-    n_q = int(os.environ.get("PEFA_HYBRID_QUERIES", "100"))
-    smode = os.environ.get("PEFA_HYBRID_MODE", "auto")
-    dim = int(os.environ.get("PEFA_ANN_DIM", "64"))
-    k = 10
-    nprobe = int(os.environ.get("PEFA_ANN_NPROBE", "8"))
-    reps = int(os.environ.get("PEFA_ANN_REPS", "2"))
-    cpus = int(os.environ.get("PEFA_ANN_CPUS", "8"))
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=4 * cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    corpus_path = _ensure_bench_corpus(spark, cpus)
-    idx_dir = f"/dev/shm/pefa_hybrid_index_{SYNTH_DOCS}"
-    t_index_build = None
-    if not os.path.exists(f"{idx_dir}/manifest.json"):
-        t0 = time.perf_counter()
-        b_mod.build_index(
-            spark, spark.read.parquet(corpus_path), idx_dir, codec="ans",
-            doc_col="doc_id", text_col="content", chunk_postings=1 << 16,
-        )
-        t_index_build = round(time.perf_counter() - t0, 3)
-    index_df, _stats, term_stats, codec, man = b_mod.load_index(spark, idx_dir)
-    index_df = index_df.cache()
-    index_df.count()
-    term_stats = term_stats.cache()
-    term_stats.count()
-
-    # embeddings over the SAME id domain as the corpus (vec_id ==
-    # doc_id), deterministic hash-derived components like ann_mode
-    n_vecs = man["num_docs"]
-    vec_path = f"/dev/shm/pefa_hybrid_vecs_{n_vecs}_{dim}"
-    if not os.path.exists(f"{vec_path}/_SUCCESS"):
-        spark.range(n_vecs).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: (
-                    (
-                        F.pmod(
-                            F.xxhash64(F.concat_ws(":", F.col("id"), i)),
-                            F.lit(2000001),
-                        )
-                        - F.lit(1000000)
-                    )
-                    / F.lit(1000000.0)
-                ).cast("float"),
-            ).alias("embedding"),
-        ).repartition(2 * cpus).write.mode("overwrite").parquet(vec_path)
-    embs = spark.read.parquet(vec_path).cache()
-    embs.count()
-
-    store_dir = f"/dev/shm/pefa_hybrid_store_{n_vecs}_{dim}"
-    t_store_build = None
-    if not os.path.exists(f"{store_dir}/manifest.json"):
-        t0 = time.perf_counter()
-        ann_store.build_ann_index(
-            spark, embs, store_dir, trained=False, sq8=False, pq=False,
-            engine="np", source=vec_path,
-        )
-        t_store_build = round(time.perf_counter() - t0, 3)
-    store_idx = ann_store.load_ann_index(spark, store_dir)
-
-    qs = c_mod.synthesize_queries(n_q, vocab_size=20000)
-    qdf = queries_to_df(spark, qs).cache()
-    qdf.count()
-    qids = [qid for qid, _t in qs]
-    qv = (
-        embs.where(F.col("vec_id").isin(qids))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .cache()
-    )
-    qv.count()
-
-    legs = {
-        "sparse_only": lambda: q_mod.run_ranked(
-            spark, index_df, qdf, codec, man["num_docs"],
-            man["avg_doc_len"], mode=smode, k=k,
-            term_stats_df=term_stats,
-        ),
-        "dense_only": lambda: store_idx.query(
-            qv, embs, k=k, nprobe=nprobe, engine="np",
-        ),
-        "hybrid": lambda: h_mod.hybrid_search_persisted(
-            spark, idx_dir, store_dir, qdf, qv, embs, k=k,
-            mode=smode, nprobe=nprobe,
-        ),
-        # the serving-loop shape: both substrates loaded+pinned ONCE
-        # (HybridServer), batches pay only their own legs + fusion
-        "hybrid_warm": lambda: server.search(
-            qdf, qv, embs, k=k, mode=smode, nprobe=nprobe,
-        ),
-    }
-    t0 = time.perf_counter()
-    server = h_mod.HybridServer(spark, idx_dir, store_dir)
-    t_server_load = round(time.perf_counter() - t0, 3)
-    times = {name: [] for name in legs}
-    counts = {}
-    for _ in range(reps):
-        for name, fn in legs.items():
-            t0 = time.perf_counter()
-            counts[name] = fn().count()
-            times[name].append(time.perf_counter() - t0)
-    rec = {
-        "metric": "hybrid_rag_serving",
-        "value": round(min(times["hybrid"]), 3),
-        "unit": "sec",
-        "num_docs": man["num_docs"],
-        "total_postings": man.get("total_postings"),
-        "dim": dim,
-        "n_queries": n_q,
-        "k": k,
-        "nprobe": nprobe,
-        "mode": smode,
-        "cpus": cpus,
-        "t_index_build_sec": t_index_build,
-        "t_store_build_sec": t_store_build,
-        "t_server_load_sec": t_server_load,
-        "queries": {n: round(min(t), 3) for n, t in times.items()},
-        "qps": {n: round(n_q / min(t), 1) for n, t in times.items()},
-        "result_rows": counts,
-    }
-    print(json.dumps(rec))
-    with open(Path(__file__).resolve().parent / "BENCH_HYBRID.json", "w") as fh:
-        json.dump(rec, fh, indent=1)
-    spark.stop()
-
-
 def main():
-    if "--hybrid" in sys.argv:
-        hybrid_mode()
-        return
-    if "--ann-maint" in sys.argv:
-        ann_maint_mode()
-        return
-    if "--ann" in sys.argv:
-        ann_mode()
-        return
     if "--latency" in sys.argv:
         latency_mode()
         return
@@ -1909,12 +1027,6 @@ def main():
         return
     if "--deletes" in sys.argv:
         deletes_mode()
-        return
-    if "--decontam" in sys.argv:
-        decontam_mode()
-        return
-    if "--mix" in sys.argv:
-        mix_mode()
         return
     if "--sharded" in sys.argv:
         sharded_mode()

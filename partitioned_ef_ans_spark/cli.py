@@ -731,147 +731,6 @@ def cmd_facets(args) -> int:
     return 0
 
 
-def _parse_kv(spec: str, cast):
-    """'en=0.5,de=0.25' -> {'en': 0.5, 'de': 0.25} (values via cast)."""
-    out = {}
-    for part in spec.split(","):
-        k, _, v = part.partition("=")
-        if not k or not v:
-            print(f"bad stratum spec {part!r} (want key=value)",
-                  file=sys.stderr)
-            raise SystemExit(2)
-        out[k] = cast(v)
-    return out
-
-
-def _read_eval(spark, args):
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(args.eval).select(
-        F.col(args.eval_id_col).alias("eval_id"),
-        F.col(args.eval_text_col).alias("text"),
-    )
-
-
-def cmd_decontam(args) -> int:
-    """Benchmark decontamination: per-(doc, eval-item) n-gram overlap
-    report (or the distinct drop-list) between a corpus and an eval
-    parquet.  ``--via-index`` serves it from a width-n shingle index
-    (zero corpus re-scan — the eval-suite-refresh shape)."""
-    from partitioned_ef_ans_spark.operators import decontam as dc_mod
-
-    if bool(args.corpus) == bool(args.via_index):
-        print("exactly one of --corpus / --via-index is required",
-              file=sys.stderr)
-        return 2
-    spark = _spark(args)
-    ev = _read_eval(spark, args)
-    if args.via_index:
-        from partitioned_ef_ans_spark.index import build as b_mod
-        from partitioned_ef_ans_spark.index.checkpoint import load_tombstones
-
-        index_df, _stats, term_stats, codec, man = b_mod.load_index(
-            spark, args.via_index
-        )
-        res = dc_mod.contamination_via_index(
-            spark, index_df, ev, codec, n=args.n,
-            min_overlap=args.min_overlap, term_stats_df=term_stats,
-            tombstones=None if args.include_deleted
-            else load_tombstones(args.via_index),
-            # a plain word index has no ngram rule — treated as width 1
-            # so a width mismatch fails loudly instead of matching
-            # nothing
-            index_ngram=man.get("ngram", 1),
-        )
-    else:
-        docs, doc_col, text_col = _read_corpus(spark, args.corpus, args)
-        res = dc_mod.contamination(
-            docs, ev, n=args.n, min_overlap=args.min_overlap,
-            doc_col=doc_col, text_col=text_col,
-        )
-    if args.out:
-        res.write.mode("overwrite").parquet(args.out)
-        print(f"wrote {args.out}")
-    elif args.drop_list:
-        for r in res.select("doc_id").distinct().orderBy("doc_id").collect():
-            print(r["doc_id"])
-    else:
-        for r in res.orderBy("doc_id", "eval_id").collect():
-            print(f"{r['doc_id']}\t{r['eval_id']}\t{r['n_hit']}\t"
-                  f"{r['eval_ngrams']}\t{r['overlap_frac']}")
-    _stop(spark)
-    return 0
-
-
-def cmd_mix(args) -> int:
-    """Training-mix construction (operators/mix.py): quality filter →
-    exact dedup → decontaminate against --eval → stratified sample
-    (--rates per-stratum keep rates, or --budgets per-stratum token
-    budgets).  Writes the selected set with --out; always prints the
-    per-stratum doc/token report."""
-    from partitioned_ef_ans_spark.operators import mix as m_mod
-
-    if bool(args.rates) == bool(args.budgets):
-        print("exactly one of --rates / --budgets is required",
-              file=sys.stderr)
-        return 2
-    rates = _parse_kv(args.rates, float) if args.rates else {}
-    budgets = _parse_kv(args.budgets, int) if args.budgets else None
-    spark = _spark(args)
-    docs, doc_col, text_col = _read_corpus(spark, args.corpus, args)
-    sel = m_mod.training_mix(
-        docs, _read_eval(spark, args), rates,
-        quality_min=args.quality_min, n=args.n,
-        max_overlap=args.max_overlap, seed=args.seed,
-        stratum_col=args.stratum_col, id_col=doc_col, text_col=text_col,
-        budgets=budgets, dedup=args.dedup,
-    )
-    if args.out:
-        sel.write.mode("overwrite").parquet(args.out)
-        sel = spark.read.parquet(args.out)  # report reads what was written
-    for r in m_mod.mix_report(
-        sel, stratum_col=args.stratum_col, text_col=text_col
-    ).collect():
-        print(f"{r[args.stratum_col]}\t{r['n_docs']}\t{r['n_tokens']}")
-    _stop(spark)
-    return 0
-
-
-def cmd_sample(args) -> int:
-    """Standalone deterministic stratified sampling: exactly one of
-    --rates (per-stratum Bernoulli keep rates), --caps (exact doc
-    quotas) or --budgets (token budgets, prefix-sum in hash order)."""
-    from partitioned_ef_ans_spark.operators import sampling as s_mod
-
-    chosen = [s for s in ("rates", "caps", "budgets")
-              if getattr(args, s)]
-    if len(chosen) != 1:
-        print("exactly one of --rates / --caps / --budgets is required",
-              file=sys.stderr)
-        return 2
-    spark = _spark(args)
-    docs, doc_col, text_col = _read_corpus(spark, args.corpus, args)
-    kw = dict(stratum_col=args.stratum_col, id_col=doc_col, seed=args.seed)
-    if args.rates:
-        sel = s_mod.stratified_sample(
-            docs, _parse_kv(args.rates, float), **kw
-        )
-    elif args.caps:
-        sel = s_mod.stratified_cap(docs, _parse_kv(args.caps, int), **kw)
-    else:
-        sel = s_mod.stratified_token_budget(
-            docs, _parse_kv(args.budgets, int), text_col=text_col, **kw
-        )
-    if args.out:
-        sel.write.mode("overwrite").parquet(args.out)
-        print(f"wrote {args.out}")
-    else:
-        for r in sel.select(doc_col).orderBy(doc_col).collect():
-            print(r[doc_col])
-    _stop(spark)
-    return 0
-
-
 def cmd_transform_queries(args) -> int:
     from pyspark.sql import functions as F
 
@@ -904,254 +763,6 @@ def cmd_transform_queries(args) -> int:
         print(" ".join(str(t) for t in r["uterm_ids"]))
     _stop(spark)
     return 0
-
-
-def cmd_ann(args) -> int:
-    """Persisted ANN index lifecycle (index/ann_store.py): ``build``
-    trains/pins IVF centroids over an embeddings table and freezes the
-    assignment + quantized twins next to it; ``query`` serves external
-    query vectors from the store (zero per-batch prep); ``add``
-    appends new vectors in O(batch) under the frozen models; ``delete``
-    tombstones ids (masked from serving immediately); ``compact`` folds
-    the tombstones physically; ``repair`` re-derives all derivable
-    accounting after a mutation crash; ``verify`` checks the artifact
-    row-accounting invariants; ``merge`` folds other stores' live
-    vectors into this one under its frozen centroids.  ``query`` with
-    a comma-separated ``--index`` list scatter-gathers across stores
-    (exact fusion — cosine needs no cross-shard statistics)."""
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark.index import ann_store
-
-    # assignment passes default to the vectorized numpy engine; the
-    # query default stays the HOF path (oracle-shaped, no driver
-    # collect of the query table beyond the broadcast)
-    engine = args.engine or ("hof" if args.action == "query" else "np")
-    if args.action in ("build", "add", "merge") and not args.embeddings:
-        print("--embeddings is required for build/add/merge",
-              file=sys.stderr)
-        return 2
-    if args.action == "merge" and not args.merge_from:
-        print("--from is required for merge", file=sys.stderr)
-        return 2
-    if args.action == "query" and not args.queries:
-        print("--queries is required for query", file=sys.stderr)
-        return 2
-    if args.action == "delete":
-        ids: list[int] = []
-        if args.ids:
-            ids += [int(x) for x in args.ids.replace(",", " ").split()]
-        if args.ids_file:
-            with open(args.ids_file) as fh:
-                ids += [int(x) for x in fh.read().split()]
-        if not ids:
-            print("no ids given (--ids / --ids-file)", file=sys.stderr)
-            return 2
-    spark = _spark(args)
-    try:
-        if args.action == "delete":
-            print(json.dumps(ann_store.delete_vectors(spark, args.index, ids)))
-            return 0
-        if args.action == "compact":
-            print(json.dumps(ann_store.compact_ann_index(spark, args.index)))
-            return 0
-        if args.action == "repair":
-            print(json.dumps(ann_store.repair_ann_index(spark, args.index)))
-            return 0
-        if args.action == "build":
-            embs = spark.read.parquet(args.embeddings)
-            man = ann_store.build_ann_index(
-                spark,
-                embs,
-                args.index,
-                n_centroids=args.n_centroids,
-                trained=not args.pinned,
-                kmeans_iters=args.kmeans_iters,
-                sq8=not args.no_sq8,
-                pq=args.pq,
-                pq_m=args.pq_m,
-                pq_ks=args.pq_ks,
-                pq_trained=args.pq_trained,
-                engine=engine,
-                source=args.embeddings,
-            )
-            print(json.dumps(man))
-            return 0
-        if args.action == "add":
-            man = ann_store.add_vectors(
-                spark,
-                args.index,
-                spark.read.parquet(args.embeddings),
-                engine=engine,
-                skip_existing=args.skip_existing,
-            )
-            print(json.dumps(man))
-            return 0
-        if args.action == "merge":
-            man = ann_store.merge_ann_stores(
-                spark,
-                args.index,
-                [d for d in args.merge_from.split(",") if d],
-                spark.read.parquet(args.embeddings),
-                engine=engine,
-            )
-            print(json.dumps(man))
-            return 0
-        if args.action == "verify":
-            res = ann_store.verify_ann_index(spark, args.index)
-            print(json.dumps(res))
-            return 0 if res["ok"] else 1
-        if args.action == "neardup":
-            emb_path = args.embeddings or ann_store._read_manifest(
-                args.index
-            ).get("source")
-            if not emb_path:
-                print(
-                    "--embeddings required (store manifest carries no "
-                    "source)",
-                    file=sys.stderr,
-                )
-                return 2
-            pairs = ann_store.neardup_via_store(
-                spark,
-                args.index,
-                spark.read.parquet(emb_path),
-                threshold=args.threshold,
-            )
-            if args.out:
-                pairs.write.mode("overwrite").parquet(args.out)
-                n = spark.read.parquet(args.out).count()
-                print(json.dumps({"pairs": n, "out": args.out}))
-            else:
-                print(json.dumps({"pairs": pairs.count()}))
-            return 0
-        # query — comma-separated store dirs scatter-gather like the
-        # text plane's `queries dirA,dirB`
-        store_dirs = [d for d in args.index.split(",") if d]
-        if args.embeddings:
-            embs = spark.read.parquet(args.embeddings)
-        else:
-            # default payload = the stores' recorded sources.  With
-            # multiple shards each may sit beside its OWN per-shard
-            # table — union them ALL (defaulting to shard 0's alone
-            # would silently drop every other shard's candidates at
-            # the rescore join); manifests are read directly, no full
-            # store load just for a path
-            srcs = [
-                ann_store._read_manifest(d).get("source")
-                for d in store_dirs
-            ]
-            if not all(srcs):
-                print(
-                    "--embeddings required (a store manifest carries "
-                    "no source)",
-                    file=sys.stderr,
-                )
-                return 2
-            uniq = list(dict.fromkeys(srcs))
-            embs = spark.read.parquet(uniq[0])
-            for p in uniq[1:]:
-                embs = embs.unionByName(spark.read.parquet(p))
-            if len(uniq) > 1:
-                embs = embs.dropDuplicates(["vec_id"])
-        qv = spark.read.parquet(args.queries)
-        if "query_id" not in qv.columns and "vec_id" in qv.columns:
-            qv = qv.withColumnRenamed("vec_id", "query_id")
-        if len(store_dirs) > 1:
-            res = ann_store.query_sharded_ann(
-                spark,
-                store_dirs,
-                qv.select("query_id", "embedding"),
-                embs,
-                k=args.k,
-                nprobe=args.nprobe,
-                quant=args.quant,
-                rescore_mult=args.rescore_mult,
-                engine=engine,
-            )
-        else:
-            res = ann_store.load_ann_index(spark, store_dirs[0]).query(
-                qv.select("query_id", "embedding"),
-                embs,
-                k=args.k,
-                nprobe=args.nprobe,
-                quant=args.quant,
-                rescore_mult=args.rescore_mult,
-                engine=engine,
-            )
-        if args.out:
-            res.write.mode("overwrite").parquet(args.out)
-            print(f"wrote {args.out}")
-        else:
-            for r in res.orderBy("query_id", "rank").collect():
-                print(
-                    f"{r['query_id']}\t{r['rank']}\t{r['doc_id']}\t{r['cos']}"
-                )
-        return 0
-    finally:
-        _stop(spark)
-
-
-def cmd_hybrid(args) -> int:
-    """End-to-end RAG retrieval from persisted artifacts
-    (operators/hybrid.py::hybrid_search_persisted): BM25 top-k from
-    the text index + dense top-k from the ANN store, RRF-fused.  Text
-    queries on stdin (``qid<TAB>terms`` like ``queries``); the dense
-    query vector for qid is the ``query_id == qid`` row of
-    ``--query-vecs`` (or, absent that, the ``vec_id == qid`` row of
-    the embeddings table)."""
-    from pyspark.sql import functions as F
-
-    from partitioned_ef_ans_spark.index import ann_store
-    from partitioned_ef_ans_spark.operators import hybrid as h_mod
-    from partitioned_ef_ans_spark.operators.ranked import queries_to_df
-
-    qs = _read_query_lines(sys.stdin)
-    if not qs:
-        print("no queries on stdin", file=sys.stderr)
-        return 1
-    spark = _spark(args)
-    try:
-        # only the manifest's source path is needed here — reading it
-        # directly avoids a full store load (assignments + tombstone
-        # sidecar reads) that hybrid_search_persisted's own
-        # HybridServer immediately repeats
-        emb_path = args.embeddings or ann_store._read_manifest(
-            args.store
-        ).get("source")
-        if not emb_path:
-            print(
-                "--embeddings required (store manifest carries no source)",
-                file=sys.stderr,
-            )
-            return 2
-        embs = spark.read.parquet(emb_path)
-        qids = [q for q, _t in qs]
-        if args.query_vecs:
-            qv = spark.read.parquet(args.query_vecs)
-            if "query_id" not in qv.columns and "vec_id" in qv.columns:
-                qv = qv.withColumnRenamed("vec_id", "query_id")
-            qv = qv.where(F.col("query_id").isin(qids))
-        else:
-            qv = embs.where(F.col("vec_id").isin(qids)).select(
-                F.col("vec_id").alias("query_id"), "embedding"
-            )
-        res = h_mod.hybrid_search_persisted(
-            spark, args.index, args.store, queries_to_df(spark, qs),
-            qv.select("query_id", "embedding"), embs, k=args.k,
-            mode=args.mode, nprobe=args.nprobe, quant=args.quant,
-            rescore_mult=args.rescore_mult,
-        )
-        if args.out:
-            res.write.mode("overwrite").parquet(args.out)
-            print(f"wrote {args.out}")
-        else:
-            for r in res.orderBy("query_id", "rank").collect():
-                print(f"{r['query_id']}\t{r['rank']}\t{r['doc_id']}\t"
-                      f"{r['rrf']}")
-        return 0
-    finally:
-        _stop(spark)
 
 
 def cmd_package(args) -> int:
@@ -1336,141 +947,6 @@ def build_parser() -> argparse.ArgumentParser:
     fc.add_argument("--include-deleted", action="store_true")
     fc.add_argument("--filter-ids-file", default=None)
     fc.set_defaults(fn=cmd_facets)
-
-    dc = sub.add_parser("decontam")
-    dc.add_argument("--corpus", default=None,
-                    help="docs parquet (scan mode)")
-    dc.add_argument("--via-index", default=None,
-                    help="width-n shingle index dir (index mode)")
-    dc.add_argument("--eval", required=True,
-                    help="eval-set parquet (eval_id, text)")
-    dc.add_argument("--n", type=int, default=13)
-    dc.add_argument("--min-overlap", type=float, default=0.8)
-    dc.add_argument("--eval-id-col", default="eval_id")
-    dc.add_argument("--eval-text-col", default="text")
-    dc.add_argument("--text-col", default="text")
-    dc.add_argument("--include-deleted", action="store_true")
-    dc.add_argument("--drop-list", action="store_true",
-                    help="print distinct contaminated doc ids only")
-    dc.add_argument("--out", default=None, help="write report parquet")
-    dc.set_defaults(fn=cmd_decontam)
-
-    mx = sub.add_parser("mix")
-    mx.add_argument("corpus")
-    mx.add_argument("--eval", required=True)
-    mx.add_argument("--rates", default=None, help="en=0.5,de=0.25")
-    mx.add_argument("--budgets", default=None,
-                    help="per-stratum token budgets: en=2000000000")
-    mx.add_argument("--quality-min", type=float, default=0.6)
-    mx.add_argument("--n", type=int, default=13)
-    mx.add_argument("--max-overlap", type=float, default=0.5)
-    mx.add_argument("--seed", default="mix0")
-    mx.add_argument("--stratum-col", default="lang")
-    mx.add_argument("--dedup", choices=("exact", "neardup"),
-                    default="exact")
-    mx.add_argument("--eval-id-col", default="eval_id")
-    mx.add_argument("--eval-text-col", default="text")
-    mx.add_argument("--text-col", default="text")
-    mx.add_argument("--out", default=None, help="write selected parquet")
-    mx.set_defaults(fn=cmd_mix)
-
-    sp = sub.add_parser("sample")
-    sp.add_argument("corpus")
-    sp.add_argument("--rates", default=None)
-    sp.add_argument("--caps", default=None)
-    sp.add_argument("--budgets", default=None)
-    sp.add_argument("--seed", default="mix0")
-    sp.add_argument("--stratum-col", default="lang")
-    sp.add_argument("--text-col", default="text")
-    sp.add_argument("--out", default=None)
-    sp.set_defaults(fn=cmd_sample)
-
-    an = sub.add_parser(
-        "ann",
-        help="persisted ANN index: build / query (sharded via "
-             "dirA,dirB) / add / delete / compact / verify / merge",
-    )
-    an.add_argument("action", choices=["build", "query", "add", "delete",
-                                       "compact", "repair", "verify",
-                                       "merge", "neardup"])
-    an.add_argument("--threshold", type=float, default=None,
-                    help="near-dup cosine threshold (action=neardup; "
-                         "default: operator default)")
-    an.add_argument("--from", default=None, dest="merge_from",
-                    help="comma-separated source store dirs whose LIVE "
-                         "vectors fold into --index (action=merge)")
-    an.add_argument("--ids", default=None,
-                    help="comma/space-separated vec ids to tombstone")
-    an.add_argument("--ids-file", default=None,
-                    help="file of whitespace-separated vec ids")
-    an.add_argument("--index", required=True,
-                    help="store directory (index/ann_store.py layout)")
-    an.add_argument("--embeddings", default=None,
-                    help="embeddings parquet (vec_id, embedding); query "
-                         "defaults to the path recorded at build time")
-    an.add_argument("--queries", default=None,
-                    help="query-vector parquet (query_id|vec_id, embedding)")
-    an.add_argument("--n-centroids", type=int, default=None,
-                    dest="n_centroids",
-                    help="IVF centroid count (default: data-driven ~sqrt(n))")
-    an.add_argument("--pinned", action="store_true",
-                    help="pin centroids to the smallest vec_ids instead of "
-                         "training Lloyd k-means")
-    an.add_argument("--kmeans-iters", type=int, default=2,
-                    dest="kmeans_iters")
-    an.add_argument("--no-sq8", action="store_true", dest="no_sq8",
-                    help="skip the int8 first-pass twin")
-    an.add_argument("--pq", action="store_true",
-                    help="also build the product-quantization twin")
-    an.add_argument("--pq-m", type=int, default=8, dest="pq_m")
-    an.add_argument("--pq-ks", type=int, default=16, dest="pq_ks")
-    an.add_argument("--pq-trained", action="store_true", dest="pq_trained",
-                    help="Lloyd-train the PQ codebooks")
-    an.add_argument("-k", type=int, default=10)
-    an.add_argument("--nprobe", type=int, default=2)
-    an.add_argument("--quant", choices=["sq8", "pq"], default=None,
-                    help="first-pass quantization for query")
-    an.add_argument("--rescore-mult", type=int, default=3,
-                    dest="rescore_mult")
-    an.add_argument("--engine", choices=["hof", "np"], default=None,
-                    help="pair-scoring engine (default: np for build/add, "
-                         "hof for query)")
-    an.add_argument("--skip-existing", action="store_true",
-                    dest="skip_existing",
-                    help="action=add: silently drop ids already in the "
-                         "store instead of rejecting the batch — the "
-                         "idempotent retry for a crashed append")
-    an.add_argument("--out", default=None,
-                    help="write query results to parquet instead of stdout")
-    an.set_defaults(fn=cmd_ann)
-
-    hy = sub.add_parser(
-        "hybrid",
-        help="persisted-artifact RAG retrieval: text index BM25 + ANN "
-             "store dense, RRF-fused (queries on stdin)",
-    )
-    hy.add_argument("--index", required=True,
-                    help="text index directory (resumable layout)")
-    hy.add_argument("--store", required=True,
-                    help="ANN store directory (index/ann_store.py layout)")
-    hy.add_argument("--embeddings", default=None,
-                    help="embeddings parquet; defaults to the store's "
-                         "recorded source")
-    hy.add_argument("--query-vecs", default=None, dest="query_vecs",
-                    help="query-vector parquet (query_id|vec_id, "
-                         "embedding); default pairs qid with vec_id==qid "
-                         "from the embeddings table")
-    hy.add_argument("-k", type=int, default=10)
-    hy.add_argument("--mode", default="auto",
-                    help="text-leg run_ranked mode (auto = measured "
-                         "size-crossover dispatch)")
-    hy.add_argument("--nprobe", type=int, default=8)
-    hy.add_argument("--quant", choices=["sq8", "pq"], default=None)
-    hy.add_argument("--rescore-mult", type=int, default=3,
-                    dest="rescore_mult")
-    hy.add_argument("--out", default=None,
-                    help="write results to parquet instead of stdout")
-    hy.set_defaults(fn=cmd_hybrid)
 
     t = sub.add_parser("transform_queries")
     t.add_argument("corpus")

@@ -8,7 +8,7 @@ one deliberate OOV token, so the full stem domain is finite and tiny:
 this module pins ``{term: porter_stem(term)}`` over that domain as a
 literal, generated once by functions/stemmer.py.
 
-The DuckDB oracle embeds it as a VALUES join (gate_training.
+The DuckDB oracle embeds it as a VALUES join (gate.
 sql_transform_queries), which upgrades the ``transform_queries`` gate
 entry from rows-only to fully value-hashed.  Two pytest locks keep it
 honest (tests/test_transform.py):

@@ -13,6 +13,10 @@ for why).
 
 from __future__ import annotations
 
+import atexit
+import os
+import re
+import shutil
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,16 +83,33 @@ MLT_M = 5
 
 _SHM_ARTIFACTS: set = set()
 
+#: ``pefa_<kind>_<pid>_<tag>`` — the PID-keyed artifact tree layout
+_SHM_TREE = re.compile(r"pefa_[a-z_]+_(\d+)_[0-9a-f]+")
+
+
+def _sweep_dead_shm_artifacts(root: str) -> None:
+    """Remove ``pefa_<kind>_<pid>_<tag>`` trees under ``root`` whose
+    PID has no ``/proc`` entry — left by a run that was killed, so its
+    atexit hook never ran (the rule perfbench's RunEnv applies to its
+    run directories)."""
+    for entry in os.scandir(root):
+        m = _SHM_TREE.fullmatch(entry.name)
+        if (
+            m
+            and entry.is_dir(follow_symlinks=False)
+            and not os.path.exists(f"/proc/{m.group(1)}")
+        ):
+            shutil.rmtree(entry.path, ignore_errors=True)
+
 
 def _register_shm_artifact(path: str) -> None:
-    """Gate helpers build PID-keyed artifact trees (text indexes, ANN
-    stores) on /dev/shm — a shared, throttled resource.  The caches
-    are process-local dicts, so without cleanup every gate process
-    leaks its trees until reboot; register each for atexit removal."""
-    import atexit
-    import shutil
-
+    """Gate helpers build PID-keyed index trees on /dev/shm — a shared,
+    throttled resource.  The caches are process-local dicts, so each
+    tree is registered for atexit removal; the first registration in a
+    process also sweeps the trees of dead processes, which a kill
+    (timeout, SIGKILL) leaves behind."""
     if not _SHM_ARTIFACTS:
+        _sweep_dead_shm_artifacts(os.path.dirname(path))
         atexit.register(
             lambda: [
                 shutil.rmtree(d, ignore_errors=True)
@@ -204,8 +225,6 @@ def _get_index(spark: SparkSession, sf_dir: str, codec: str = "ans"):
     key = (sf_dir, codec)
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
-    import os
-
     tag = hashlib.sha1(f"{sf_dir}|{codec}".encode()).hexdigest()[:12]
     # /dev/shm, not /tmp: this sandbox's /tmp is a throttled shared
     # disk.  Path is per-PID: two processes (e.g. pytest + the driver
@@ -1447,7 +1466,6 @@ def _get_phrase_index(spark: SparkSession, sf_dir: str, n: int = 2):
     """Build (once per (sf_dir, n)) and load the n-gram shingle index
     — the ordinary build with tokenize_shingles swapped in."""
     import hashlib
-    import os
 
     from partitioned_ef_ans_spark.index import build as b_mod
     from partitioned_ef_ans_spark.index import phrase as ph_mod
@@ -1697,3 +1715,145 @@ SELECT facet_of, query_id, facet, matches FROM f1
 UNION ALL
 SELECT facet_of, query_id, facet, matches FROM f2
 """
+
+
+# ------------------------------------- sha invariant / query transformer
+
+def q_corpus_sha(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BASELINE.json per-row invariant: sha256(content) fingerprints of
+    the corpus adaptation (verified against the DuckDB-computed
+    truth)."""
+    from partitioned_ef_ans_spark.corpus import corpus_from_documents, corpus_sha
+
+    return corpus_sha(corpus_from_documents(load_documents(spark, sf_dir))).select(
+        "repo", "path", "sha256"
+    )
+
+
+def sql_corpus_sha() -> str:
+    return """
+SELECT source AS repo,
+       printf('doc/%09d.txt', doc_id) AS path,
+       sha256(text) AS sha256
+FROM documents"""
+
+
+def q_transform_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6 (transform_queries.cpp): text queries -> (stemmed-id,
+    unstemmed-id) sequences with whole-query OOV drop.  Oracle-hashed
+    via the pinned stem table (functions/stem_fixture.py) — DuckDB has
+    no Porter stemmer, but the gate vocabulary is closed, so the
+    fixture join is exact; semantics also covered by
+    tests/test_transform.py."""
+    from partitioned_ef_ans_spark.operators.transform import (
+        stem_udf_df,
+        transform_queries,
+    )
+
+    docs = load_documents(spark, sf_dir)
+    tokens = tokenizer.tokenize(docs, doc_col="doc_id", text_col="text")
+    udict = build_term_dictionary(tokens)
+    sdict = build_term_dictionary(
+        stem_udf_df(tokens.select("term").distinct())
+        .select(F.col("stemmed").alias("term"))
+        .distinct()
+    )
+    qdf = gate_queries_df(spark)
+    out = transform_queries(qdf, sdict, udict)
+    return out.select(
+        "query_id",
+        F.concat_ws(" ", F.transform("term_ids", lambda x: x.cast("string"))).alias("tline"),
+        F.concat_ws(" ", F.transform("uterm_ids", lambda x: x.cast("string"))).alias("uline"),
+    )
+
+
+def q_transform_queries_uids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6, oracle-checkable projection: the UNSTEMMED id line plus the
+    whole-query OOV drop.  The drop is fully determined by the
+    unstemmed lookup (any corpus term's Porter stem is by construction
+    in the stemmed dictionary, so sid is null only when uid is), which
+    makes this half of transform_queries exactly SQL-expressible; the
+    stemmed line stays rows-only (no SQL Porter stemmer).  A pure
+    projection of :func:`q_transform_queries` — one pipeline, no
+    drift."""
+    return q_transform_queries(spark, sf_dir).select("query_id", "uline")
+
+
+def _values_query_positions() -> str:
+    """VALUES clause of every gate query token with its position."""
+    rows = []
+    for qid, terms in GATE_QUERIES:
+        for pos, t in enumerate(terms):
+            rows.append(f"({qid}, {pos}, '{t.lower()}')")
+    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS q(query_id, pos, term)"
+
+
+def sql_transform_queries() -> str:
+    """Full S6 oracle: both the stemmed and unstemmed id lines.
+
+    DuckDB has no Porter stemmer, so stemming goes through the PINNED
+    stem table (functions/stem_fixture.py — the gate corpus vocabulary
+    is closed at 31 terms, identical at every sf, and pytest locks the
+    fixture against a live recomputation over the actual parquet
+    vocabulary).  The stemmed dictionary is rebuilt in SQL exactly as
+    build_term_dictionary does it: distinct stems of distinct corpus
+    terms, row_number ordered by stem, 0-based."""
+    from partitioned_ef_ans_spark.functions.stem_fixture import (
+        stem_fixture_values_sql,
+    )
+
+    q_vals = _values_query_positions()
+    return f"""
+WITH {_TOK_CTE},
+udict AS (
+  SELECT term, CAST(row_number() OVER (ORDER BY term) - 1 AS BIGINT) AS term_id
+  FROM (SELECT DISTINCT term FROM tok)
+),
+sdict AS (
+  SELECT stemmed, CAST(row_number() OVER (ORDER BY stemmed) - 1 AS BIGINT) AS sid
+  FROM (
+    SELECT DISTINCT stemmap.stemmed
+    FROM (SELECT DISTINCT term FROM tok) v
+    JOIN {stem_fixture_values_sql()} USING (term)
+  )
+),
+q AS ({q_vals}),
+qs AS (
+  SELECT q.query_id, q.pos, q.term, stemmap.stemmed
+  FROM q LEFT JOIN {stem_fixture_values_sql()} ON q.term = stemmap.term
+),
+m AS (
+  SELECT qs.query_id, qs.pos, sd.sid, ud.term_id AS uid
+  FROM qs
+  LEFT JOIN sdict sd ON qs.stemmed = sd.stemmed
+  LEFT JOIN udict ud ON qs.term = ud.term
+),
+keep AS (
+  SELECT query_id FROM m GROUP BY query_id
+  HAVING max(CASE WHEN sid IS NULL OR uid IS NULL THEN 1 ELSE 0 END) = 0
+)
+SELECT m.query_id,
+       string_agg(CAST(sid AS VARCHAR), ' ' ORDER BY pos) AS tline,
+       string_agg(CAST(uid AS VARCHAR), ' ' ORDER BY pos) AS uline
+FROM m JOIN keep USING (query_id)
+GROUP BY m.query_id"""
+
+
+def sql_transform_queries_uids() -> str:
+    q_vals = _values_query_positions()
+    return f"""
+WITH {_TOK_CTE},
+dict AS (
+  SELECT term, CAST(row_number() OVER (ORDER BY term) - 1 AS BIGINT) AS term_id
+  FROM (SELECT DISTINCT term FROM tok)
+),
+q AS ({q_vals}),
+m AS (SELECT q.query_id, q.pos, d.term_id FROM q LEFT JOIN dict d USING (term)),
+keep AS (
+  SELECT query_id FROM m GROUP BY query_id
+  HAVING max(CASE WHEN term_id IS NULL THEN 1 ELSE 0 END) = 0
+)
+SELECT m.query_id,
+       string_agg(CAST(term_id AS VARCHAR), ' ' ORDER BY pos) AS uline
+FROM m JOIN keep USING (query_id)
+GROUP BY m.query_id"""

@@ -39,6 +39,21 @@ def ship_package(spark: SparkSession) -> None:
     sc._pefa_shipped = True
 
 
+#: heap ceiling for the local-mode driver
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Half of host RAM (``MemTotal``), capped at 24g; the cap alone
+    where ``/proc/meminfo`` does not exist."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(kb // 2048, DRIVER_MEM_CAP_MB)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "partitioned_ef_ans_spark",
@@ -70,8 +85,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # local-mode: driver JVM hosts all executor threads; size the
-        # heap for the thread count (32 tasks x hash-agg state)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # heap for the thread count (32 tasks x hash-agg state), but
+        # never past what the host can back
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         # shuffle/spill on tmpfs: this sandbox's /tmp disk is shared
         # with noisy neighbors and throttles shuffle I/O (measured 3x
         # wall variance); RAM-backed local dirs remove that variable

@@ -1,9 +1,8 @@
-"""Binary-collection exchange format, IVF recall, multimodal plumbing."""
+"""Binary-collection exchange format and query-file reader."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from partitioned_ef_ans_spark.sources import binary_collection as bc
 
@@ -35,127 +34,3 @@ def test_query_file_reader(spark, tmp_path):
     qdf = bc.read_queries_file(spark, str(p)).orderBy("query_id").collect()
     assert [r["term_ids"] for r in qdf] == [[1, 2, 3], [], [10278, 90269, 96541], [7]]
 
-
-def test_ivf_recall_vs_bruteforce(spark, sf_small):
-    from partitioned_ef_ans_spark.operators.ann import cosine_topk, ivf_topk
-
-    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    exact = {
-        (r["vec_id"], r["neighbor"]) for r in cosine_topk(emb, k=5).collect()
-    }
-    approx = {
-        (r["vec_id"], r["neighbor"])
-        for r in ivf_topk(emb, k=5, n_centroids=8).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.3, recall  # IVF with nprobe=2/8 on weak clusters
-
-
-def test_ivf_kmeans_recall_at_least_matches_naive_centroids(spark, sf_small):
-    """Trained Lloyd centroids must not lose recall vs the naive
-    first-8-vectors centroids (and usually gain it)."""
-    from partitioned_ef_ans_spark.operators.ann import (
-        cosine_topk,
-        ivf_topk,
-        kmeans_centroids,
-    )
-
-    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    exact = {
-        (r["vec_id"], r["neighbor"]) for r in cosine_topk(emb, k=5).collect()
-    }
-    naive = {
-        (r["vec_id"], r["neighbor"]) for r in ivf_topk(emb, k=5).collect()
-    }
-    cent = kmeans_centroids(emb, n_centroids=8, iters=2)
-    trained = {
-        (r["vec_id"], r["neighbor"])
-        for r in ivf_topk(emb, k=5, centroids=cent).collect()
-    }
-    r_naive = len(exact & naive) / len(exact)
-    r_trained = len(exact & trained) / len(exact)
-    assert r_trained >= r_naive - 0.05, (r_trained, r_naive)
-
-
-def test_multimodal_features_shape(spark, sf_small):
-    from partitioned_ef_ans_spark.operators import multimodal as mm
-
-    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    feats = mm.decode_features(mm.attach_payload(docs)).collect()
-    assert len(feats) == docs.count()
-    assert all(len(r["features"]) == mm.FEATURE_DIM for r in feats)
-    # deterministic across runs
-    feats2 = mm.decode_features(mm.attach_payload(docs)).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, feats2))
-
-
-def test_multimodal_injected_decoder(spark, sf_small):
-    """A genuine (non-hash) decoder rides the same Arrow plumbing."""
-    import numpy as np
-
-    from partitioned_ef_ans_spark.operators import multimodal as mm
-
-    def char_class_decoder(payload):
-        # real decode work: parse the payload bytes as utf-8 and bin
-        # characters into FEATURE_DIM classes (a stand-in for
-        # pixel-pooling that actually reads the media bytes).
-        text = payload.decode("utf-8")
-        vec = np.zeros(mm.FEATURE_DIM, dtype=np.float32)
-        for ch in text:
-            vec[ord(ch) % mm.FEATURE_DIM] += 1.0
-        return vec / max(len(text), 1)
-
-    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    payloads = mm.attach_payload(docs)
-    got = {
-        r["doc_id"]: list(r["features"])
-        for r in mm.decode_features(payloads, decoder=char_class_decoder).collect()
-    }
-    want = {
-        r["doc_id"]: [float(x) for x in char_class_decoder(bytes(r["payload"]))]
-        for r in payloads.collect()
-    }
-    assert got.keys() == want.keys()
-    for doc_id, vec in want.items():
-        assert got[doc_id] == pytest.approx(vec), doc_id
-
-    # a decoder returning the wrong width fails loudly, not silently
-    bad = mm.decode_features(payloads, decoder=lambda b: np.zeros(3, "f4"))
-    with pytest.raises(Exception, match="expected"):
-        bad.collect()
-
-
-def test_multimodal_pil_factory_guarded(spark, sf_small):
-    """pil_image_decoder: import-guarded; usable end-to-end iff Pillow."""
-    import pytest as _pytest
-
-    from partitioned_ef_ans_spark.operators import multimodal as mm
-
-    with _pytest.raises(ValueError, match="FEATURE_DIM"):
-        mm.pil_image_decoder(size=(3, 3))
-
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-
-    if not has_pil:
-        with _pytest.raises(ImportError, match="Pillow"):
-            mm.pil_image_decoder()
-    else:  # pragma: no cover - container has no Pillow
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("L", (16, 16), color=128).save(buf, format="PNG")
-        png = buf.getvalue()
-        docs = spark.createDataFrame(
-            [(1, "img", bytearray(png), None)],
-            "doc_id long, modality string, payload binary, meta string",
-        )
-        rows = mm.decode_features(docs, decoder=mm.pil_image_decoder()).collect()
-        assert len(rows[0]["features"]) == mm.FEATURE_DIM
-        assert all(abs(v - 128 / 255.0) < 1e-6 for v in rows[0]["features"])

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -36,163 +34,6 @@ def test_streaming_ingest_matches_batch(spark, tmp_path):
     assert got[(2, "delta")] == 1
     assert got[(1, "gamma")] == 2  # corrected doc
     assert (1, "alpha") not in got  # old version of doc 1 superseded
-
-
-def test_streaming_stateful_dedup_matches_batch(spark, tmp_path):
-    """applyInPandasWithState exact dedup: cross-batch duplicates are
-    caught via the per-sha256 state recovered from the checkpoint, and
-    the verdict set equals the batch exact_dedup on the union (inputs
-    arrive in doc_id order, so first-seen == global-min canonical)."""
-    from partitioned_ef_ans_spark.operators.dedup import exact_dedup
-    from partitioned_ef_ans_spark.streaming.dedup import (
-        start_streaming_dedup,
-        streaming_dedup_result,
-    )
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    b1 = spark.createDataFrame(
-        [(0, "same text"), (1, "same text"), (2, "unique one")],
-        "doc_id long, content string",
-    )
-    b1.write.mode("append").parquet(inp)
-    start_streaming_dedup(spark, inp, out, ckpt)
-
-    # second wave (separate run = state recovery from checkpoint):
-    # doc 3 duplicates doc 0 ACROSS batches, doc 4 is fresh
-    b2 = spark.createDataFrame(
-        [(3, "same text"), (4, "unique two")], "doc_id long, content string"
-    )
-    b2.write.mode("append").parquet(inp)
-    start_streaming_dedup(spark, inp, out, ckpt)
-
-    got = {
-        r["doc_id"]: (r["canonical_doc_id"], r["is_duplicate"])
-        for r in streaming_dedup_result(spark, out).collect()
-    }
-    assert len(got) == 5  # every doc verdict emitted exactly once
-    assert got[3] == (0, True), "cross-batch duplicate missed (state lost)"
-    assert got[1] == (0, True) and got[0] == (0, False)
-    assert got[2][1] is False and got[4][1] is False
-
-    batch = {
-        r["doc_id"]: r["canonical_doc_id"]
-        for r in exact_dedup(
-            spark.read.parquet(inp).withColumnRenamed("content", "text")
-        ).collect()
-    }
-    assert {d: c for d, (c, _) in got.items()} == batch
-
-
-def test_streaming_dedup_batch_parity_adversarial_order(spark, tmp_path):
-    """batch_parity mode under ADVERSARIAL (non-monotone doc_id)
-    arrival: the smallest doc_id of each duplicate family arrives
-    LAST, so the running-min canonical must demote earlier canonicals
-    via correction rows, and the finalized table must equal batch
-    exact_dedup exactly."""
-    from partitioned_ef_ans_spark.operators.dedup import exact_dedup
-    from partitioned_ef_ans_spark.streaming.dedup import (
-        start_streaming_dedup,
-        streaming_dedup_final,
-        streaming_dedup_result,
-    )
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # wave 1: the HIGH ids of family A arrive first (canonical=7 for now)
-    b1 = spark.createDataFrame(
-        [(7, "fam a"), (9, "fam a"), (5, "solo")],
-        "doc_id long, content string",
-    )
-    b1.write.mode("append").parquet(inp)
-    start_streaming_dedup(spark, inp, out, ckpt, mode="batch_parity")
-
-    # wave 2 (separate run = state recovery): doc 1 joins family A with
-    # the SMALLEST id -> canonical must flip 7 -> 1 via a correction
-    b2 = spark.createDataFrame(
-        [(1, "fam a"), (8, "fam b")], "doc_id long, content string"
-    )
-    b2.write.mode("append").parquet(inp)
-    start_streaming_dedup(spark, inp, out, ckpt, mode="batch_parity")
-
-    log = streaming_dedup_result(spark, out).collect()
-    # the change log must contain the demotion correction for doc 7
-    corrections = [
-        r for r in log if r["doc_id"] == 7 and r["is_duplicate"]
-    ]
-    assert corrections and corrections[0]["canonical_doc_id"] == 1
-
-    got = {
-        r["doc_id"]: (r["canonical_doc_id"], r["is_duplicate"])
-        for r in streaming_dedup_final(spark, out).collect()
-    }
-    batch = {
-        r["doc_id"]: r["canonical_doc_id"]
-        for r in exact_dedup(
-            spark.read.parquet(inp).withColumnRenamed("content", "text")
-        ).collect()
-    }
-    assert {d: c for d, (c, _) in got.items()} == batch
-    assert got[7] == (1, True) and got[1] == (1, False)
-    assert got[9] == (1, True)
-    assert got[5] == (5, False) and got[8] == (8, False)
-
-
-def test_streaming_windowed_events_watermark(spark, tmp_path):
-    """Watermarked tumbling-window aggregation: windows emit once the
-    watermark closes them, late-but-inside-watermark events count,
-    older-than-watermark events are dropped; emitted windows match the
-    batch windowed_event_counts over the surviving events."""
-    from datetime import datetime as DT
-
-    from partitioned_ef_ans_spark.operators.events import windowed_event_counts
-    from partitioned_ef_ans_spark.streaming.events import (
-        start_windowed_events,
-        windowed_events_result,
-    )
-
-    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-    def feed(rows):
-        spark.createDataFrame(
-            [(i, DT(2024, 1, 1, h, m), 1, et, float(v), "{}")
-             for i, (h, m, et, v) in enumerate(rows)], schema
-        ).write.mode("append").parquet(inp)
-        start_windowed_events(spark, inp, out, ckpt)
-
-    feed([(0, 10, "a", 1.5), (0, 20, "a", 2.0), (0, 40, "b", 3.25),
-          (1, 15, "a", 4.0)])                       # max ts 01:15, wm < 0
-    feed([(0, 50, "b", 5.0),                        # LATE into hour 0: ok
-          (5, 0, "a", 6.0), (5, 30, "a", 7.0)])     # advances wm to 04:00
-    feed([(2, 30, "a", 8.0),                        # older than wm: DROPPED
-          (7, 0, "a", 9.0)])                        # h0,h1 emit this run
-    feed([(9, 0, "a", 10.0)])                       # flush h5 (wm 05:30)
-
-    got = {
-        (r["window_start"].hour, r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_events_result(spark, out).collect()
-    }
-    assert got[(0, "a")] == (2, 3.5)
-    assert got[(0, "b")] == (2, 8.25), "late-but-inside-watermark event lost"
-    assert got[(1, "a")] == (1, 4.0)
-    assert (2, "a") not in got, "older-than-watermark event not dropped"
-    assert got[(5, "a")] == (2, 13.0)
-
-    # batch twin agrees on every emitted window (the dropped hour-2
-    # event is the one divergence, by design)
-    surviving = spark.read.parquet(inp).where(F.hour("ts") != 2)
-    batch = {
-        (r["window_start"].hour, r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_event_counts(surviving).collect()
-    }
-    for key, val in got.items():
-        assert batch[key] == val
 
 
 def test_plans_pushdown_and_broadcast(spark, sf_small):
