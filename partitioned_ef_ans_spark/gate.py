@@ -83,12 +83,13 @@ MLT_M = 5
 
 _SHM_ARTIFACTS: set = set()
 
-#: ``pefa_<kind>_<pid>_<tag>`` — the PID-keyed artifact tree layout
-_SHM_TREE = re.compile(r"pefa_[a-z_]+_(\d+)_[0-9a-f]+")
+#: ``pefa_index_<pid>_<sha1[:12]>`` — the only tree layout gate writes
+#: (other ``pefa_*`` trees, e.g. bench.py's shared index, are not ours)
+_SHM_TREE = re.compile(r"pefa_index_(\d+)_[0-9a-f]{12}")
 
 
 def _sweep_dead_shm_artifacts(root: str) -> None:
-    """Remove ``pefa_<kind>_<pid>_<tag>`` trees under ``root`` whose
+    """Remove ``pefa_index_<pid>_<tag>`` trees under ``root`` whose
     PID has no ``/proc`` entry — left by a run that was killed, so its
     atexit hook never ran (the rule perfbench's RunEnv applies to its
     run directories)."""

@@ -136,14 +136,6 @@ def _count_batches_packed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
 _MERGE_FANIN = 8
 
 
-def merge_slots(df: DataFrame) -> int:
-    """Task count of the executor-side merge level: ``_MERGE_FANIN``,
-    but never more than the cluster runs at once — a merge slot with
-    no free core only queues a second wave of python tasks, and fewer
-    slots keep the driver fan-in inside the same bound."""
-    return max(1, min(_MERGE_FANIN, df.sparkSession.sparkContext.defaultParallelism))
-
-
 def _merge_sparse_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Executor-side merge of sparse (idx, count) partials: same wire
     format in and out, so the driver-side freeze loop is unchanged."""
@@ -209,7 +201,7 @@ def train_ans_packed_models(postings: DataFrame):
     rows = (
         postings.select("doc_ids", "freqs")
         .mapInPandas(_count_batches_packed, schema="stream string, counts binary")
-        .repartition(merge_slots(postings))
+        .repartition(_MERGE_FANIN)
         .mapInPandas(_merge_packed_partials, schema="stream string, counts binary")
         .collect()
     )
@@ -233,7 +225,7 @@ def train_ans_models(postings: DataFrame, variant: str = ans_msb.DEFAULT_VARIANT
     """Pass 1 + freeze: returns ((enc_d, dec_d), (enc_f, dec_f)).
 
     Two-level aggregation: per-partition sparse partials merge on
-    executors (:func:`merge_slots` tasks) before a bounded driver collect —
+    executors (_MERGE_FANIN tasks) before a bounded driver collect —
     the reference's single-node accumulation (create_freq_index.cpp
     model pass) becomes a treeAggregate, not a driver fan-in."""
     rows = (
@@ -241,7 +233,7 @@ def train_ans_models(postings: DataFrame, variant: str = ans_msb.DEFAULT_VARIANT
         .mapInPandas(
             _count_batches_factory(variant), schema="stream string, counts binary"
         )
-        .repartition(merge_slots(postings))
+        .repartition(_MERGE_FANIN)
         .mapInPandas(_merge_sparse_partials, schema="stream string, counts binary")
         .collect()
     )

@@ -58,28 +58,6 @@ def _lineage(spark: SparkSession, staged: DataFrame, part_id: int) -> dict:
     }
 
 
-def _lineages(staged: DataFrame, num_parts: int) -> dict[int, dict]:
-    """:func:`_lineage` of every part in ONE grouped job (a part with
-    no rows gets the same all-zero record the per-part aggregate
-    returns)."""
-    out = {p: {"rows": 0, "postings": 0, "term_sig": 0} for p in range(num_parts)}
-    for row in (
-        staged.groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.size("doc_ids")).alias("postings"),
-            F.sum(F.crc32(F.col("term"))).alias("term_sig"),
-        )
-        .collect()
-    ):
-        out[int(row["part_id"])] = {
-            "rows": int(row["rows"] or 0),
-            "postings": int(row["postings"] or 0),
-            "term_sig": int(row["term_sig"] or 0),
-        }
-    return out
-
-
 def build_index_resumable(
     spark: SparkSession,
     corpus_docs: DataFrame,
@@ -180,9 +158,8 @@ def build_index_resumable(
 
     encoded_parts = 0
     skipped = 0
-    lineages = _lineages(staged, num_parts)
     for part_id in range(num_parts):
-        lin = lineages[part_id]
+        lin = _lineage(spark, staged, part_id)
         prev = done.get(part_id)
         if prev and all(prev["lineage"][k] == lin[k] for k in lin):
             skipped += 1
@@ -436,7 +413,7 @@ def _ans_counts_for(postings: DataFrame, variant: str):
         .mapInPandas(
             b_mod._count_batches_factory(variant), schema="stream string, counts binary"
         )
-        .repartition(b_mod.merge_slots(postings))
+        .repartition(b_mod._MERGE_FANIN)
         .mapInPandas(
             b_mod._merge_sparse_partials, schema="stream string, counts binary"
         )

@@ -1126,18 +1126,14 @@ def _query_side(queries_df: DataFrame, term_stats_df: DataFrame) -> DataFrame:
     if hit is not None and hit[0] is term_stats_df:
         return hit[1]
     qf = query_freqs(queries_df)  # query_id, term, qtf, n_terms
-    # the vocabulary-sized term_stats scan streams through ONE
-    # broadcast hash join against the tiny query side (no exchange)
-    qside = (
-        term_stats_df.select(
-            "term",
-            F.col("max_term_weight").alias("max_weight"),
-            F.col("df").alias("term_df"),
-        )
-        .join(F.broadcast(qf), "term")
-        .select("term", "query_id", "qtf", "n_terms", "max_weight", "term_df")
-        .localCheckpoint(eager=True)
+    per_term_max = term_stats_df.join(
+        F.broadcast(qf.select("term").distinct()), "term", "left_semi"
+    ).select(
+        "term",
+        F.col("max_term_weight").alias("max_weight"),
+        F.col("df").alias("term_df"),
     )
+    qside = qf.join(per_term_max, "term").localCheckpoint(eager=True)
     if len(memo) > 16:  # epoch bumps / many shards: don't grow unbounded
         memo.clear()
     memo[key] = (term_stats_df, qside)
@@ -1239,15 +1235,13 @@ def batched_query_lists_df(
             qside = hit[1]
         else:
             qf = query_freqs(queries_df)
+            per_term = term_stats_df.join(
+                F.broadcast(qf.select("term").distinct()), "term", "left_semi"
+            ).select("term", "df")
             qlist = qf.groupBy("term").agg(
                 F.collect_list(F.struct("query_id", "qtf", "n_terms")).alias("qs")
             )
-            qside = (
-                term_stats_df.select("term", "df")
-                .join(F.broadcast(qlist), "term")
-                .select("term", "qs", "df")
-                .localCheckpoint(eager=True)
-            )
+            qside = qlist.join(per_term, "term").localCheckpoint(eager=True)
             if len(memo) > 16:
                 memo.clear()
             memo[key] = (term_stats_df, qside)

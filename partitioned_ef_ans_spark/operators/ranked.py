@@ -38,25 +38,12 @@ def query_freqs(queries_df: DataFrame) -> DataFrame:
     Mirrors ``query_freqs`` (queries.hpp:139-153): duplicate terms fold
     into a multiplicity; n_terms = #distinct terms (the conjunctive
     match requirement).
-
-    A query is one row, so the fold is row-local (array functions over
-    ``terms``): no exchange, where a groupBy + join formulation costs
-    three shuffles on every serving call's query side.
     """
-    uniq = F.array_distinct("terms")
-    return queries_df.select(
-        "query_id",
-        F.explode(uniq).alias("term"),
-        F.size(uniq).cast("int").alias("n_terms"),
-        "terms",
-    ).select(
-        "query_id",
-        "term",
-        F.size(F.filter("terms", lambda t: t.eqNullSafe(F.col("term"))))
-        .cast("int")
-        .alias("qtf"),
-        "n_terms",
-    )
+    exploded = queries_df.select(
+        "query_id", F.explode("terms").alias("term")
+    ).groupBy("query_id", "term").agg(F.count(F.lit(1)).cast("int").alias("qtf"))
+    n = exploded.groupBy("query_id").agg(F.count(F.lit(1)).cast("int").alias("n_terms"))
+    return exploded.join(n, "query_id")
 
 
 def ranked_query(

@@ -13,10 +13,12 @@ def test_first_registration_sweeps_dead_pid_trees(tmp_path, monkeypatch):
     with open("/proc/sys/kernel/pid_max") as fh:
         dead_pid = int(fh.read())
     dead = tmp_path / f"pefa_index_{dead_pid}_0ab1f15aab9a"
-    dead_kind = tmp_path / f"pefa_phrase_idx_{dead_pid}_5f8ddabcc4fa"
+    # bench.py's long-lived shared index: digits fit the tag pattern,
+    # and its doc count would read as a (dead) PID
+    bench = tmp_path / "pefa_bench_index_lat_40000_123456"
     live = tmp_path / f"pefa_index_{os.getpid()}_17adaf9216ea"
     other = tmp_path / f"pefa_spark_local_{dead_pid}"  # no tag: not ours
-    for d in (dead, dead_kind, live, other):
+    for d in (dead, bench, live, other):
         (d / "part").mkdir(parents=True)
     pkg_zip = tmp_path / "pefa_pkg_dac3bc21b48f34f8.zip"
     pkg_zip.write_bytes(b"")
@@ -27,7 +29,7 @@ def test_first_registration_sweeps_dead_pid_trees(tmp_path, monkeypatch):
     gate._register_shm_artifact(str(tmp_path / f"pefa_index_{os.getpid()}_aa"))
 
     assert not dead.exists()
-    assert not dead_kind.exists()
+    assert bench.exists()
     assert live.exists()
     assert other.exists()
     assert pkg_zip.exists()
