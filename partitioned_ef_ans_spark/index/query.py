@@ -31,10 +31,12 @@ from __future__ import annotations
 import bisect
 import heapq
 import os
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1094,50 +1096,137 @@ def make_bool_kernel(codec_bc, conjunctive, tomb_bc=None):
     return kernel
 
 
-def _query_side(queries_df: DataFrame, term_stats_df: DataFrame) -> DataFrame:
-    """The (tiny) pre-joined query side of the gather join —
-    ``query_freqs ⨝ term-stats slice`` — MATERIALIZED once and memoized
-    on the queries frame.
+class QueryPlan:
+    """A query batch planned on the driver: per query, its term
+    multiset (``Counter`` — duplicate terms fold into ``qtf`` and
+    ``n_terms`` counts distinct terms, the reference's query_freqs,
+    queries.hpp:139-153), plus the frozen term_stats row of every
+    referenced in-vocabulary term.
 
-    Why: the lazy form re-plans and re-executes the whole query-side
-    subtree (explode + two aggregations + a distinct + the semi-join,
-    ~5 exchanges and 5 broadcast builds under AQE) on EVERY serving
-    call; a 13-leg bench batch or a serving loop re-pays ~10 scheduler
-    round-trips per call for a few-KB relation that never changes.
-    ``localCheckpoint`` truncates the plan so each reuse is one
-    broadcast of a materialized handful of rows; the blocks are
-    reclaimed by the ContextCleaner when the frame goes out of scope.
-    The memo keys on the term_stats frame identity + the mutation
-    epoch (see :func:`bump_payload_epoch`), the same invalidation
-    discipline as the payload-total memo."""
-    key = (id(term_stats_df), _PAYLOAD_EPOCH)
-    memo = getattr(queries_df, "_pefa_qside", None)
-    if memo is None:
-        memo = {}
-        try:
-            queries_df._pefa_qside = memo
-        except Exception:
-            pass
-    hit = memo.get(key)
-    # the entry pins the term_stats frame it was built against: id()
-    # alone could be recycled by a NEW frame after GC, silently
-    # serving another index's bounds — the identity check (and the
-    # strong reference keeping the id alive) closes that hole
-    if hit is not None and hit[0] is term_stats_df:
-        return hit[1]
-    qf = query_freqs(queries_df)  # query_id, term, qtf, n_terms
-    per_term_max = term_stats_df.join(
-        F.broadcast(qf.select("term").distinct()), "term", "left_semi"
-    ).select(
-        "term",
-        F.col("max_term_weight").alias("max_weight"),
-        F.col("df").alias("term_df"),
+    Query batches are a few KB.  Planning them in Spark (explode, two
+    aggregates, a join and a term_stats semi-join) cost ~10 scheduler
+    round-trips per serving call; here the only Spark work is one
+    filtered term_stats collect, and the plan reaches the gather join
+    as Arrow-built local relations (``LocalTableScan`` — collecting or
+    broadcasting one schedules no scan of its own)."""
+
+    def __init__(self, queries, stats, types):
+        self.queries = queries  # [(query_id, Counter{term: qtf})]
+        self.stats = stats  # {term: (max_term_weight, df, payload_bytes)}
+        self.types = types  # arrow types of (max_term_weight, df)
+
+    def term_filter(self):
+        """``term IN (...)`` over the referenced in-vocabulary terms —
+        the index scan reads only their chunks."""
+        terms = sorted({t for _, c in self.queries for t in c if t in self.stats})
+        return F.col("term").isin(terms) if terms else F.lit(False)
+
+    def giant_ids(self, budget_bytes: int) -> list[int]:
+        """Query ids whose referenced compressed payload (frozen
+        term_stats bytes, summed over distinct terms) exceeds
+        ``budget_bytes``."""
+        return [
+            q for q, c in self.queries
+            if sum(self.stats[t][2] or 0 for t in c if t in self.stats)
+            > budget_bytes
+        ]
+
+    def split(self, ids) -> tuple["QueryPlan", "QueryPlan"]:
+        """(queries in ``ids``, the rest) — no re-collect."""
+        ids = set(ids)
+        return (
+            QueryPlan([x for x in self.queries if x[0] in ids], self.stats, self.types),
+            QueryPlan([x for x in self.queries if x[0] not in ids], self.stats, self.types),
+        )
+
+    def queries_frame(self, spark) -> DataFrame:
+        """(query_id, terms) local relation for runners that plan their
+        query side in Spark (the docpart twins)."""
+        return spark.createDataFrame(pa.table({
+            "query_id": pa.array([q for q, _ in self.queries], pa.int64()),
+            "terms": pa.array(
+                [list(c.elements()) for _, c in self.queries],
+                pa.list_(pa.string()),
+            ),
+        }))
+
+    def side_frame(self, spark) -> DataFrame:
+        """One row per (query, in-vocabulary term): (term, query_id,
+        qtf, n_terms, max_weight, term_df) — the gather join's query
+        side."""
+        cols = {k: [] for k in ("term", "query_id", "qtf", "n_terms", "mw", "df")}
+        for q, c in self.queries:
+            for t, f in c.items():
+                st = self.stats.get(t)
+                if st is None:
+                    continue  # OOV: no list, but still counted in n_terms
+                cols["term"].append(t)
+                cols["query_id"].append(q)
+                cols["qtf"].append(f)
+                cols["n_terms"].append(len(c))
+                cols["mw"].append(st[0])
+                cols["df"].append(st[1])
+        return spark.createDataFrame(pa.table({
+            "term": pa.array(cols["term"], pa.string()),
+            "query_id": pa.array(cols["query_id"], pa.int64()),
+            "qtf": pa.array(cols["qtf"], pa.int32()),
+            "n_terms": pa.array(cols["n_terms"], pa.int32()),
+            "max_weight": pa.array(cols["mw"], self.types[0]),
+            "term_df": pa.array(cols["df"], self.types[1]),
+        }))
+
+    def batched_frame(self, spark) -> DataFrame:
+        """One row per in-vocabulary term: (term, qs, df), ``qs`` the
+        referencing queries as a ``list<struct<query_id, qtf,
+        n_terms>>``."""
+        qs: dict = {}
+        for q, c in self.queries:
+            for t, f in c.items():
+                if t in self.stats:
+                    qs.setdefault(t, []).append(
+                        {"query_id": q, "qtf": f, "n_terms": len(c)}
+                    )
+        terms = sorted(qs)
+        q_type = pa.struct([
+            ("query_id", pa.int64()), ("qtf", pa.int32()), ("n_terms", pa.int32()),
+        ])
+        return spark.createDataFrame(pa.table({
+            "term": pa.array(terms, pa.string()),
+            "qs": pa.array([qs[t] for t in terms], pa.list_(q_type)),
+            "df": pa.array([self.stats[t][1] for t in terms], self.types[1]),
+        }))
+
+
+def plan_queries(
+    queries_df: DataFrame, term_stats_df: DataFrame, distinct: bool = False
+) -> QueryPlan:
+    """Collect the (query_id, terms) batch once, fold duplicate terms
+    per query (``distinct``: boolean ops dedup them first,
+    queries.hpp:30-34), and fetch the referenced term_stats rows with
+    one filtered collect."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    per_q: dict[int, Counter] = {}
+    for r in queries_df.select("query_id", "terms").collect():
+        terms = r["terms"] or ()
+        per_q.setdefault(int(r["query_id"]), Counter()).update(
+            list(dict.fromkeys(terms)) if distinct else terms
+        )
+    vocab = sorted({t for c in per_q.values() for t in c if t is not None})
+    stats = {}
+    if vocab:
+        for r in (
+            term_stats_df.where(F.col("term").isin(vocab))
+            .select("term", "max_term_weight", "df", "payload_bytes")
+            .collect()
+        ):
+            stats[r[0]] = (r[1], r[2], r[3])
+    sch = term_stats_df.schema
+    types = (
+        to_arrow_type(sch["max_term_weight"].dataType),
+        to_arrow_type(sch["df"].dataType),
     )
-    qside = qf.join(per_term_max, "term").localCheckpoint(eager=True)
-    if len(memo) > 16:  # epoch bumps / many shards: don't grow unbounded
-        memo.clear()
-    memo[key] = (term_stats_df, qside)
-    return qside
+    return QueryPlan(list(per_q.items()), stats, types)
 
 
 def codec_broadcast(spark, codec):
@@ -1162,36 +1251,38 @@ def codec_broadcast(spark, codec):
 
 def query_lists_df(
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     term_stats_df: DataFrame | None = None,
 ) -> DataFrame:
     """Join the (broadcast) query term multiset into the index table —
-    only referenced chunks survive (Catalyst pushes the term filter
-    into the parquet scan).
+    only referenced chunks survive (the term filter reaches the parquet
+    scan).
 
     ``term_stats_df`` is the build-frozen per-term WAND metadata
     (``max_term_weight``, the reference's m_max_term_weight,
-    wand_data.hpp:35-50): the vocabulary-sized table is semi-joined
-    down to the query's terms FIRST, so a query batch never scans or
-    aggregates the index itself.  The ``None`` fallback (full-index
-    groupBy) exists only for ad-hoc index DataFrames without a frozen
-    sidecar — never the scale path.
-
-    The query side arrives as ONE pre-joined, memoized broadcast
-    (:func:`_query_side`), so a serving call's plan is a single
-    broadcast hash join + the gather exchange.
+    wand_data.hpp:35-50): the query batch is planned against it on the
+    driver (:func:`plan_queries`, or an already-built
+    :class:`QueryPlan`), so a serving call's plan is one broadcast
+    hash join of a local relation + the gather exchange and a batch
+    never scans or aggregates the index itself.  The ``None`` fallback
+    (full-index groupBy) exists only for ad-hoc index DataFrames
+    without a frozen sidecar — never the scale path.
     """
     # the chunk-row df is frozen at its SEGMENT's build and goes stale
     # when a term's list spans base + delta segments — every consumer
     # gets the authoritative term-level df (== list length) instead
     if term_stats_df is not None:
-        qside = _query_side(queries_df, term_stats_df)
+        plan = (
+            queries if isinstance(queries, QueryPlan)
+            else plan_queries(queries, term_stats_df)
+        )
         return (
             index_df.drop("df")
-            .join(F.broadcast(qside), "term")
+            .where(plan.term_filter())
+            .join(F.broadcast(plan.side_frame(index_df.sparkSession)), "term")
             .withColumnRenamed("term_df", "df")
         )
-    qf = query_freqs(queries_df)  # query_id, term, qtf, n_terms
+    qf = query_freqs(queries)  # query_id, term, qtf, n_terms
     per_term_max = index_df.groupBy("term").agg(
         F.max("chunk_max_weight").alias("max_weight"),
         F.sum("n").cast("long").alias("term_df"),
@@ -1217,35 +1308,16 @@ def batched_query_lists_df(
     query batch moves Σ_q(referenced bytes) through Arrow and decodes
     head chunks once per query.  This batch twin moves every touched
     chunk exactly once regardless of batch size: the shape the
-    doc-partitioned runners use.
+    doc-partitioned runners use.  The query side is driver-planned
+    exactly like :func:`query_lists_df`.
     """
     if term_stats_df is not None:
-        # same materialize-once-and-broadcast discipline as
-        # :func:`_query_side`, keyed separately (different shape)
-        key = (id(term_stats_df), _PAYLOAD_EPOCH)
-        memo = getattr(queries_df, "_pefa_qside_b", None)
-        if memo is None:
-            memo = {}
-            try:
-                queries_df._pefa_qside_b = memo
-            except Exception:
-                pass
-        hit = memo.get(key)
-        if hit is not None and hit[0] is term_stats_df:
-            qside = hit[1]
-        else:
-            qf = query_freqs(queries_df)
-            per_term = term_stats_df.join(
-                F.broadcast(qf.select("term").distinct()), "term", "left_semi"
-            ).select("term", "df")
-            qlist = qf.groupBy("term").agg(
-                F.collect_list(F.struct("query_id", "qtf", "n_terms")).alias("qs")
-            )
-            qside = qlist.join(per_term, "term").localCheckpoint(eager=True)
-            if len(memo) > 16:
-                memo.clear()
-            memo[key] = (term_stats_df, qside)
-        return index_df.drop("df").join(F.broadcast(qside), "term")
+        plan = plan_queries(queries_df, term_stats_df)
+        return (
+            index_df.drop("df")
+            .where(plan.term_filter())
+            .join(F.broadcast(plan.batched_frame(index_df.sparkSession)), "term")
+        )
     qf = query_freqs(queries_df)
     qterms = qf.select("term").distinct()
     per_term = (
@@ -1323,22 +1395,9 @@ def giant_query_ids(
     budget_bytes: int,
 ) -> list[int]:
     """Query ids whose total referenced compressed payload (from the
-    build-frozen term_stats — no index scan) exceeds ``budget_bytes``.
-    One vocabulary-semi-joined aggregate over the tiny query batch;
-    the result list is bounded by the batch size."""
-    qf = query_freqs(queries_df).select("query_id", "term").distinct()
-    # vocabulary-sized term_stats is cut to the referenced terms by a
-    # broadcast semi-join BEFORE anything aggregates (tiny result)
-    ref_stats = term_stats_df.select("term", "payload_bytes").join(
-        F.broadcast(qf.select("term").distinct()), "term", "left_semi"
-    )
-    per_q = (
-        qf.join(F.broadcast(ref_stats), "term")
-        .groupBy("query_id")
-        .agg(F.sum("payload_bytes").alias("ref_bytes"))
-        .where(F.col("ref_bytes") > budget_bytes)
-    )
-    return [int(r["query_id"]) for r in per_q.collect()]
+    build-frozen term_stats — no index scan) exceeds ``budget_bytes``:
+    a driver-side byte sum over the planned batch."""
+    return plan_queries(queries_df, term_stats_df).giant_ids(budget_bytes)
 
 
 def run_ranked(
@@ -1404,22 +1463,19 @@ def run_ranked(
     if codec.docs is None and mode == "wand_bmw":
         mode = "wand"  # EF families carry no intra-list block maxima
 
-    if (
-        term_stats_df is not None
-        and docpart_budget_bytes is not None
-        # probe short-circuit: when the WHOLE index's compressed
-        # payload fits the budget, no query can exceed it — the
-        # memoized scalar replaces a per-batch probe job (the probe
-        # was the uniform r4 suite slowdown: one multi-stage Spark
-        # job per run_ranked call, ~0.3-0.6 s each on this host)
-        and _total_payload_bytes(term_stats_df) > docpart_budget_bytes
-    ):
-        big = giant_query_ids(queries_df, term_stats_df, docpart_budget_bytes)
+    # plan the batch once; giant-query routing splits the planned rows
+    qside, routed = queries_df, None
+    if term_stats_df is not None:
+        qside = plan_queries(queries_df, term_stats_df)
+        big = (
+            qside.giant_ids(docpart_budget_bytes)
+            if docpart_budget_bytes is not None else []
+        )
         if big:
             from partitioned_ef_ans_spark.index import blockmax as bmx
 
-            big_df = queries_df.where(F.col("query_id").isin(big))
-            rest_df = queries_df.where(~F.col("query_id").isin(big))
+            big_plan, qside = qside.split(big)
+            big_df = big_plan.queries_frame(spark)
             if mode == "ranked_and":
                 # conjunctive twin: per-chunk partials + distinct-term
                 # match-count filter (never the union-scoring paths)
@@ -1437,19 +1493,14 @@ def run_ranked(
                     spark, index_df, big_df, codec, num_docs, avg_len, k=k,
                     term_stats_df=term_stats_df, tomb_bc=tomb_bc,
                 )
-            rest = run_ranked(
-                spark, index_df, rest_df, codec, num_docs, avg_len,
-                mode=mode, k=k, dtype=dtype, term_stats_df=term_stats_df,
-                docpart_budget_bytes=None, tombstones=tomb_bc,
-            )
-            return rest.unionByName(routed)
 
     codec_bc = codec_broadcast(spark, codec)
-    joined = query_lists_df(index_df, queries_df, term_stats_df)
+    joined = query_lists_df(index_df, qside, term_stats_df)
     kernel = make_ranked_kernel(
         codec_bc, num_docs, avg_len, k, mode, dtype, tomb_bc=tomb_bc
     )
-    return joined.groupBy("query_id").applyInPandas(kernel, schema=RESULT_SCHEMA)
+    out = joined.groupBy("query_id").applyInPandas(kernel, schema=RESULT_SCHEMA)
+    return out if routed is None else out.unionByName(routed)
 
 
 def ranked_scores_docpartitioned(
@@ -2096,43 +2147,29 @@ def run_boolean(
     if allowlist is not None:
         tombstones = make_allowlist(allowlist, tombstones)
     tomb_bc = _as_tomb_bc(spark, tombstones)
-    # boolean ops dedup query terms first (queries.hpp:30-34).  The
-    # deduped frame is memoized on the input frame so repeated boolean
-    # calls over one batch (bool_and + bool_or legs, serving loops)
-    # share ONE _query_side materialization instead of rebuilding it
-    # per call.
-    qdf = getattr(queries_df, "_pefa_dedup_q", None)
-    if qdf is None:
-        qdf = queries_df.select(
-            "query_id", F.array_distinct("terms").alias("terms")
+    # boolean ops dedup query terms first (queries.hpp:30-34)
+    routed = None
+    if term_stats_df is not None:
+        qside = plan_queries(queries_df, term_stats_df, distinct=True)
+        big = (
+            qside.giant_ids(docpart_budget_bytes)
+            if docpart_budget_bytes is not None else []
         )
-        try:
-            queries_df._pefa_dedup_q = qdf
-        except Exception:
-            pass
-    if (
-        term_stats_df is not None
-        and docpart_budget_bytes is not None
-        and _total_payload_bytes(term_stats_df) > docpart_budget_bytes
-    ):
-        big = giant_query_ids(qdf, term_stats_df, docpart_budget_bytes)
         if big:
+            big_plan, qside = qside.split(big)
             routed = run_boolean_docpartitioned(
-                spark, index_df,
-                qdf.where(F.col("query_id").isin(big)),
+                spark, index_df, big_plan.queries_frame(spark),
                 codec, conjunctive, term_stats_df=term_stats_df,
                 tomb_bc=tomb_bc,
             )
-            rest = run_boolean(
-                spark, index_df,
-                qdf.where(~F.col("query_id").isin(big)),
-                codec, conjunctive, term_stats_df=term_stats_df,
-                docpart_budget_bytes=None, tombstones=tomb_bc,
-            )
-            return rest.unionByName(routed)
-    joined = query_lists_df(index_df, qdf, term_stats_df)
+    else:
+        qside = queries_df.select(
+            "query_id", F.array_distinct("terms").alias("terms")
+        )
+    joined = query_lists_df(index_df, qside, term_stats_df)
     kernel = make_bool_kernel(codec_bc, conjunctive, tomb_bc=tomb_bc)
-    return joined.groupBy("query_id").applyInPandas(kernel, schema=COUNT_SCHEMA)
+    out = joined.groupBy("query_id").applyInPandas(kernel, schema=COUNT_SCHEMA)
+    return out if routed is None else out.unionByName(routed)
 
 
 def facet_counts(

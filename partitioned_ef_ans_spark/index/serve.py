@@ -277,8 +277,9 @@ def run_ranked_direct(
     routed = None
     if docpart_budget_bytes is not None:
         term_stats_df = spark.read.parquet(f"{idx_dir}/term_stats.parquet")
-        # same probe short-circuit as run_ranked: an index whose whole
-        # compressed payload fits the budget cannot host a giant query
+        # an index whose whole compressed payload fits the budget
+        # cannot host a giant query: the dir-cached scalar skips the
+        # planning collect
         tot = _dir_payload_total(spark, idx_dir)
         big = (
             q_mod.giant_query_ids(

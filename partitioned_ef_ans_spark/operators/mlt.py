@@ -79,13 +79,7 @@ def run_more_like_this(
     similar documents, source excluded."""
     from partitioned_ef_ans_spark.index import query as q_mod
 
-    # materialized via localCheckpoint: run_ranked references its
-    # queries frame more than once (dispatch probe + list join), and
-    # unlike cache() the blocks are reclaimed when the frame goes out
-    # of scope — repeated calls never accumulate pinned cache entries
-    qdf = mlt_queries(
-        doc_ids_df, docs_df, term_stats_df, m=m
-    ).localCheckpoint(eager=True)
+    qdf = mlt_queries(doc_ids_df, docs_df, term_stats_df, m=m)
     res = q_mod.run_ranked(
         spark, index_df, qdf, codec, num_docs, avg_len,
         mode=mode, k=int(k) + 1, dtype=dtype,

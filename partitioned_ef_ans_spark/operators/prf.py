@@ -149,14 +149,14 @@ def run_ranked_prf(
     """
     from partitioned_ef_ans_spark.index import query as q_mod
 
-    # materialize the tiny intermediates: run_ranked references its
-    # queries frame more than once (giant-query dispatch probe + the
-    # list join), and without materialization each reference would
-    # re-execute the whole stage-1 retrieval.  localCheckpoint (not
-    # cache) so lineage is truncated and the blocks are reclaimed by
-    # the ContextCleaner when the frames go out of scope — repeated
-    # invocations in one session never accumulate pinned cache entries
-    # stage 1 is an internal FEEDBACK PROBE: its rows never surface,
+    # materialize the feedback pairs: ``fb`` is read twice (feedback
+    # doc ids + expansion weights), and without materialization each
+    # read would re-execute the whole stage-1 retrieval.
+    # localCheckpoint (not cache) so lineage is truncated and the
+    # blocks are reclaimed by the ContextCleaner when the frame goes
+    # out of scope — repeated invocations in one session never
+    # accumulate pinned cache entries.
+    # Stage 1 is an internal FEEDBACK PROBE: its rows never surface,
     # only the (query, doc) pairs feed expansion, and run_ranked modes
     # are rank- and value-identical (the gate families' guarantee) —
     # so it routes through the measured-crossover auto dispatch
@@ -176,7 +176,7 @@ def run_ranked_prf(
         "query_id", F.explode(F.array_distinct("terms")).alias("term")
     )
     exp = expansion_terms(fb, fb_tf, orig, m)
-    expanded = expand_queries(queries_df, exp).localCheckpoint(eager=True)
+    expanded = expand_queries(queries_df, exp)
     return q_mod.run_ranked(
         spark, index_df, expanded, codec, num_docs, avg_len,
         mode=mode, k=int(k), dtype=dtype, term_stats_df=term_stats_df,

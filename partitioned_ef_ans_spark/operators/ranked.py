@@ -26,10 +26,15 @@ from partitioned_ef_ans_spark.functions import bm25
 def queries_to_df(
     spark: SparkSession, queries: list[tuple[int, list[str]]]
 ) -> DataFrame:
-    """Literal query set -> (query_id, terms array<string>)."""
-    return spark.createDataFrame(
-        [(int(q), list(t)) for q, t in queries], "query_id long, terms array<string>"
-    )
+    """Literal query set -> (query_id, terms array<string>), built from
+    Arrow: the frame plans as a local relation, so collecting it (the
+    serving planner does, once per call) schedules no Spark job."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array([int(q) for q, _ in queries], pa.int64()),
+        "terms": pa.array([list(t) for _, t in queries], pa.list_(pa.string())),
+    }))
 
 
 def query_freqs(queries_df: DataFrame) -> DataFrame:

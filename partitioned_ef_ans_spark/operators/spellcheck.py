@@ -205,13 +205,7 @@ def run_ranked_fuzzy(
     masking / dispatch guarantee inherited)."""
     from partitioned_ef_ans_spark.index import query as q_mod
 
-    # materialized via localCheckpoint: run_ranked references its
-    # queries frame more than once (dispatch probe + list join), and
-    # unlike cache() the blocks are reclaimed when the frame goes out
-    # of scope — repeated calls never accumulate pinned cache entries
-    corrected = correct_query_terms(
-        queries_df, term_stats_df, max_dist
-    ).localCheckpoint(eager=True)
+    corrected = correct_query_terms(queries_df, term_stats_df, max_dist)
     return q_mod.run_ranked(
         spark, index_df, corrected, codec, num_docs, avg_len,
         mode=mode, k=k, dtype=dtype, term_stats_df=term_stats_df, **kw,
