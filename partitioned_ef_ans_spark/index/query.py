@@ -1103,12 +1103,12 @@ class QueryPlan:
     queries.hpp:139-153), plus the frozen term_stats row of every
     referenced in-vocabulary term.
 
-    Query batches are a few KB.  Planning them in Spark (explode, two
-    aggregates, a join and a term_stats semi-join) cost ~10 scheduler
-    round-trips per serving call; here the only Spark work is one
-    filtered term_stats collect, and the plan reaches the gather join
-    as Arrow-built local relations (``LocalTableScan`` — collecting or
-    broadcasting one schedules no scan of its own)."""
+    Query batches are a few KB, and every exchange of a Spark-planned
+    query side costs a scheduler round trip per serving call; planned
+    here, the only Spark work is one filtered term_stats collect, and
+    the plan reaches the gather join as Arrow-built local relations
+    (``LocalTableScan`` — collecting or broadcasting one schedules no
+    scan of its own)."""
 
     def __init__(self, queries, stats, types):
         self.queries = queries  # [(query_id, Counter{term: qtf})]
@@ -1153,27 +1153,17 @@ class QueryPlan:
     def side_frame(self, spark) -> DataFrame:
         """One row per (query, in-vocabulary term): (term, query_id,
         qtf, n_terms, max_weight, term_df) — the gather join's query
-        side."""
-        cols = {k: [] for k in ("term", "query_id", "qtf", "n_terms", "mw", "df")}
-        for q, c in self.queries:
-            for t, f in c.items():
-                st = self.stats.get(t)
-                if st is None:
-                    continue  # OOV: no list, but still counted in n_terms
-                cols["term"].append(t)
-                cols["query_id"].append(q)
-                cols["qtf"].append(f)
-                cols["n_terms"].append(len(c))
-                cols["mw"].append(st[0])
-                cols["df"].append(st[1])
-        return spark.createDataFrame(pa.table({
-            "term": pa.array(cols["term"], pa.string()),
-            "query_id": pa.array(cols["query_id"], pa.int64()),
-            "qtf": pa.array(cols["qtf"], pa.int32()),
-            "n_terms": pa.array(cols["n_terms"], pa.int32()),
-            "max_weight": pa.array(cols["mw"], self.types[0]),
-            "term_df": pa.array(cols["df"], self.types[1]),
-        }))
+        side.  OOV terms have no row but still count in n_terms."""
+        rows = [
+            {"term": t, "query_id": q, "qtf": f, "n_terms": len(c),
+             "max_weight": self.stats[t][0], "term_df": self.stats[t][1]}
+            for q, c in self.queries for t, f in c.items() if t in self.stats
+        ]
+        return spark.createDataFrame(pa.Table.from_pylist(rows, pa.schema([
+            ("term", pa.string()), ("query_id", pa.int64()),
+            ("qtf", pa.int32()), ("n_terms", pa.int32()),
+            ("max_weight", self.types[0]), ("term_df", self.types[1]),
+        ])))
 
     def batched_frame(self, spark) -> DataFrame:
         """One row per in-vocabulary term: (term, qs, df), ``qs`` the
@@ -1186,15 +1176,16 @@ class QueryPlan:
                     qs.setdefault(t, []).append(
                         {"query_id": q, "qtf": f, "n_terms": len(c)}
                     )
-        terms = sorted(qs)
+        rows = [
+            {"term": t, "qs": v, "df": self.stats[t][1]}
+            for t, v in sorted(qs.items())
+        ]
         q_type = pa.struct([
             ("query_id", pa.int64()), ("qtf", pa.int32()), ("n_terms", pa.int32()),
         ])
-        return spark.createDataFrame(pa.table({
-            "term": pa.array(terms, pa.string()),
-            "qs": pa.array([qs[t] for t in terms], pa.list_(q_type)),
-            "df": pa.array([self.stats[t][1] for t in terms], self.types[1]),
-        }))
+        return spark.createDataFrame(pa.Table.from_pylist(rows, pa.schema([
+            ("term", pa.string()), ("qs", pa.list_(q_type)), ("df", self.types[1]),
+        ])))
 
 
 def plan_queries(
