@@ -74,7 +74,7 @@ def test_term_stats_frozen_equals_index_agg(spark, built):
     assert frozen == live
 
 
-def test_query_side_follows_each_term_stats_frame(spark, built):
+def test_planned_side_follows_each_term_stats_frame(spark, built):
     """One queries frame served against two term_stats frames (two
     indexes' frozen stats) gets each frame's own df and bounds, in
     either order and on repeat calls — nothing from an earlier plan
