@@ -221,25 +221,30 @@ def train_ans_packed_models(postings: DataFrame):
     return ap.freeze_models(cd, mvd), ap.freeze_models(cf, mvf)
 
 
-def train_ans_models(postings: DataFrame, variant: str = ans_msb.DEFAULT_VARIANT):
-    """Pass 1 + freeze: returns ((enc_d, dec_d), (enc_f, dec_f)).
+def ans_counts(postings: DataFrame, variant: str = ans_msb.DEFAULT_VARIANT,
+               fanin: int = _MERGE_FANIN):
+    """Pass 1 of the ANS model training: the raw (docs_counts,
+    freqs_counts) matrices of the given chunked lists.
 
     Two-level aggregation: per-partition sparse partials merge on
-    executors (_MERGE_FANIN tasks) before a bounded driver collect —
+    executors (``fanin`` tasks) before a bounded driver collect —
     the reference's single-node accumulation (create_freq_index.cpp
-    model pass) becomes a treeAggregate, not a driver fan-in."""
-    rows = (
-        postings.select("doc_ids", "freqs")
-        .mapInPandas(
-            _count_batches_factory(variant), schema="stream string, counts binary"
-        )
-        .repartition(_MERGE_FANIN)
-        .mapInPandas(_merge_sparse_partials, schema="stream string, counts binary")
-        .collect()
+    model pass) becomes a treeAggregate, not a driver fan-in.
+    ``fanin=1`` skips the executor level for inputs of a few
+    partitions (a delta segment's staged part): the driver folds their
+    partials directly, one python task wave fewer."""
+    rows = postings.select("doc_ids", "freqs").mapInPandas(
+        _count_batches_factory(variant), schema="stream string, counts binary"
     )
-    # bounded by construction: <= 2 * _MERGE_FANIN rows regardless of
-    # input partitioning (recorded in the build manifest)
-    train_ans_models.last_partials_collected = len(rows)
+    if fanin > 1:
+        rows = rows.repartition(fanin).mapInPandas(
+            _merge_sparse_partials, schema="stream string, counts binary"
+        )
+    rows = rows.collect()
+    # bounded by construction: <= 2 * fanin rows regardless of input
+    # partitioning, 2 per input partition at fanin=1 (recorded in the
+    # build manifest)
+    ans_counts.last_partials_collected = len(rows)
     cd = ans_msb.new_counts(variant)
     cf = ans_msb.new_counts(variant)
     for r in rows:
@@ -247,6 +252,15 @@ def train_ans_models(postings: DataFrame, variant: str = ans_msb.DEFAULT_VARIANT
         idx, vals = flat[: len(flat) // 2], flat[len(flat) // 2 :]
         tgt = cd if r["stream"] == "docs" else cf
         np.add.at(tgt.ravel(), idx, vals.astype(np.uint64))
+    return cd, cf
+
+
+def train_ans_models(postings: DataFrame, variant: str = ans_msb.DEFAULT_VARIANT,
+                     fanin: int = _MERGE_FANIN):
+    """Pass 1 (`ans_counts`) + freeze: returns ((enc_d, dec_d),
+    (enc_f, dec_f))."""
+    cd, cf = ans_counts(postings, variant, fanin)
+    train_ans_models.last_partials_collected = ans_counts.last_partials_collected
     return ans_msb.freeze_models(cd, variant), ans_msb.freeze_models(cf, variant)
 
 

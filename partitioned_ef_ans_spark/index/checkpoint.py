@@ -233,17 +233,16 @@ def part_bound_scales(out_dir: str, avg_len_now: float) -> dict[int, float]:
     bound by the avg ratio stays an upper bound on every new weight.
     A 1e-6 relative margin absorbs the float32 re-rounding of the
     inflated bounds."""
-    path = f"{out_dir}/checkpoints.jsonl"
-    if not os.path.exists(path):
-        return {}
-    scales: dict[int, float] = {}
-    with open(path) as fh:
-        for line in fh:
-            rec = json.loads(line)
-            enc_avg = rec.get("avg_len_at_encode")
-            if enc_avg and avg_len_now > enc_avg:
-                scales[int(rec["part_id"])] = (avg_len_now / enc_avg) * (1.0 + 1e-6)
-    return scales
+    return _bound_scales(_read_ckpt(out_dir), avg_len_now)
+
+
+def _bound_scales(done: dict[int, dict], avg_len_now: float) -> dict[int, float]:
+    """`part_bound_scales` over in-memory checkpoint records."""
+    return {
+        int(p): (avg_len_now / r["avg_len_at_encode"]) * (1.0 + 1e-6)
+        for p, r in done.items()
+        if r.get("avg_len_at_encode") and avg_len_now > r["avg_len_at_encode"]
+    }
 
 
 def _swap_dir_write(df: DataFrame, final_dir: str) -> None:
@@ -399,34 +398,86 @@ def _live_delta_pids(out_dir: str, num_parts: int) -> list[int]:
     return sorted(pids)
 
 
-def _ans_counts_for(postings: DataFrame, variant: str):
-    """(docs_counts, freqs_counts) raw-model count matrices for the
-    given chunked lists (the train_ans_models pass 1, without freeze;
-    same two-level merge so the driver fan-in stays bounded even when
-    an update touches most of the vocabulary)."""
-    import numpy as np
+def _read_ckpt(out_dir: str) -> dict[int, dict]:
+    """part_id -> its ``checkpoints.jsonl`` record (last line wins)."""
+    done: dict[int, dict] = {}
+    path = f"{out_dir}/checkpoints.jsonl"
+    if os.path.exists(path):
+        with open(path) as fh:
+            for line in fh:
+                rec = json.loads(line)
+                done[int(rec["part_id"])] = rec
+    return done
 
-    from partitioned_ef_ans_spark.codecs import ans_msb
 
-    rows = (
-        postings.select("doc_ids", "freqs")
-        .mapInPandas(
-            b_mod._count_batches_factory(variant), schema="stream string, counts binary"
-        )
-        .repartition(b_mod._MERGE_FANIN)
-        .mapInPandas(
-            b_mod._merge_sparse_partials, schema="stream string, counts binary"
-        )
-        .collect()
+def _write_ckpt(path: str, done: dict[int, dict]) -> None:
+    with open(path, "w") as fh:
+        for pid in sorted(done):
+            fh.write(json.dumps(done[pid]) + "\n")
+
+
+def _ckpt_totals(done: dict[int, dict]) -> dict:
+    """The manifest's global size metrics, summed from the per-part
+    records — each record holds its part's postings and payload bytes
+    as encoded, so no aggregate over the index is needed."""
+    postings = sum(int(r.get("postings", 0)) for r in done.values())
+    nbytes = sum(int(r.get("payload_bytes", 0)) for r in done.values())
+    return dict(
+        total_postings=postings,
+        payload_bytes=nbytes,
+        bits_per_posting=nbytes * 8 / (postings or 1),
     )
-    cd = ans_msb.new_counts(variant)
-    cf = ans_msb.new_counts(variant)
-    for r in rows:
-        flat = np.frombuffer(r["counts"], dtype=np.int64)
-        idx, vals = flat[: len(flat) // 2], flat[len(flat) // 2:]
-        tgt = cd if r["stream"] == "docs" else cf
-        np.add.at(tgt.ravel(), idx, vals.astype(np.uint64))
-    return cd, cf
+
+
+def _encode_to(df: DataFrame, codec_bc, avg_len: float,
+               dest: str) -> tuple[int, int]:
+    """Encode staged chunks ``df`` into the index part dir ``dest`` (a
+    `_swap_dir_write`) and return the part's (postings, payload
+    bytes), observed on the write itself — no read-back aggregate
+    job.  A delta segment's staged part is one or a few
+    files: a round-robin split spreads the python encode over every
+    core (each payload depends on its own row only, so the split moves
+    rows between files, never bytes within a payload)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    enc = spread.mapInPandas(
+        b_mod._encode_factory(codec_bc, avg_len), schema=b_mod.INDEX_SCHEMA
+    ).observe(
+        obs, F.sum("n").alias("postings"),
+        F.sum(F.length("payload")).alias("bytes"),
+    )
+    _swap_dir_write(enc, dest)
+    got = obs.get
+    return int(got["postings"] or 0), int(got["bytes"] or 0)
+
+
+def _segment_models(codec: str, chunks: DataFrame):
+    """Fresh models for one delta segment's staged chunks (ANS
+    families), or None for model-free codecs.  The staged part is one
+    or a few files, so the count partials merge on the driver."""
+    if codec in b_mod.ANS_CODEC_VARIANTS:
+        return b_mod.train_ans_models(
+            chunks, variant=b_mod.ANS_CODEC_VARIANTS[codec], fanin=1
+        )
+    if codec == "ans_packed":
+        return b_mod.train_ans_packed_models(chunks)
+    return None
+
+
+def _staged_tf(staged: DataFrame) -> DataFrame:
+    """Staging chunk rows back to ``(term, doc_id, tf, doc_len)`` —
+    the lengths ride in the chunks, so re-chunking them needs no
+    doc_stats join."""
+    return staged.select(
+        "term", F.explode(F.arrays_zip("doc_ids", "freqs", "doc_lens")).alias("z")
+    ).select(
+        "term",
+        F.col("z.doc_ids").alias("doc_id"),
+        F.col("z.freqs").cast("int").alias("tf"),
+        F.col("z.doc_lens").alias("doc_len"),
+    )
 
 
 class UpdateInProgress(RuntimeError):
@@ -452,10 +503,8 @@ def _refresh_path(spark, path: str) -> None:
     # routing short-circuit) — a delta update can grow an index past
     # the docpart budget and the memo must not outlive that
     _q_mod.bump_payload_epoch()
-    try:
-        spark.catalog.refreshByPath(path)
-    except Exception:
-        pass  # non-SQL sessions / path vanished mid-teardown
+    # a path that does not exist (yet) is a no-op, not an error
+    spark.catalog.refreshByPath(path)
 
 
 def _locked(fn):
@@ -747,7 +796,8 @@ def _refresh_sidecars(
 ) -> dict:
     """Refreeze term_stats.parquet from the bound-inflated index view
     (so ``max_term_weight`` stays an upper bound for stale parts) and
-    rewrite the manifest with the new global scalars.
+    rewrite the manifest with the new global scalars (size totals from
+    the checkpoint records the caller just wrote).
 
     The index tree was mutated by the caller within this same job, so
     any cached relation over it (the caller's pre-mutation load_index
@@ -760,18 +810,10 @@ def _refresh_sidecars(
     if scales:
         total = b_mod.apply_bound_scales(total, scales)
     _swap_dir_write(b_mod.term_stats_agg(total), f"{out_dir}/term_stats.parquet")
-    # same alias hazard for the just-swapped sidecar: a caller-cached
-    # term_stats frame would serve the PRE-swap rows to this aggregate
-    _refresh_path(spark, f"{out_dir}/term_stats.parquet")
-    agg = spark.read.parquet(f"{out_dir}/term_stats.parquet").agg(
-        F.sum("postings").alias("postings"), F.sum("payload_bytes").alias("bytes")
-    ).collect()[0]
     man.update(
         num_docs=num_docs,
         avg_doc_len=avg_len,
-        total_postings=int(agg["postings"] or 0),
-        payload_bytes=int(agg["bytes"] or 0),
-        bits_per_posting=int(agg["bytes"] or 0) * 8 / int(agg["postings"] or 1),
+        **_ckpt_totals(_read_ckpt(out_dir)),
         **extra,
     )
     _write_manifest_atomic(out_dir, man)
@@ -1573,7 +1615,7 @@ def update_index_incremental(
         aff_lists = staged.where(F.col("part_id").isin(aff_parts)).join(
             F.broadcast(aff_terms), "term", "left_semi"
         )
-        cd, cf = _ans_counts_for(aff_lists, variant)
+        cd, cf = b_mod.ans_counts(aff_lists, variant)
         (enc_d, _), (enc_f, _) = models
         if not (ans_msb.models_cover(enc_d, cd) and ans_msb.models_cover(enc_f, cf)):
             full_reencode = True
@@ -1594,13 +1636,7 @@ def update_index_incremental(
     encode_parts = list(range(num_parts)) if full_reencode else aff_parts
 
     # ---- 6. re-encode + swap index parts; refresh checkpoint records
-    done: dict[int, dict] = {}
-    ckpt_path = f"{out_dir}/checkpoints.jsonl"
-    if os.path.exists(ckpt_path):
-        with open(ckpt_path) as fh:
-            for line in fh:
-                rec = json.loads(line)
-                done[int(rec["part_id"])] = rec
+    done = _read_ckpt(out_dir)
     for pid in encode_parts:
         t_part = time.perf_counter()
         idx_dir = f"{out_dir}/index.parquet/part={pid}"
@@ -1636,9 +1672,7 @@ def update_index_incremental(
     for pid, rec in done.items():
         # pre-update records: bounds were encoded under the OLD avg
         rec.setdefault("avg_len_at_encode", old_avg)
-    with open(ckpt_path, "w") as fh:
-        for pid in sorted(done):
-            fh.write(json.dumps(done[pid]) + "\n")
+    _write_ckpt(f"{out_dir}/checkpoints.jsonl", done)
 
     # ---- 7. doc stats become visible LAST: a doc enters the replay
     # filter (old_max) only once its postings are fully folded in, so
@@ -1678,12 +1712,15 @@ def update_index_delta(
     instead of O(touched postings).
 
     ``max_segments`` enables the tiered-merge policy (Lucene
-    TieredMergePolicy analogue): when the committed segment count
-    exceeds it, `compact_deltas` runs under the same writer lock —
-    read amplification stays bounded without anyone scheduling
-    compactions by hand, at O(live deltas) per fold (base parts are
-    never re-read; measured 5.1 s vs the 41 s major fold at 33.7M
-    postings, BENCH.md).  None (default) keeps the policy manual.
+    TieredMergePolicy analogue): when this update would take the
+    committed segment count past it, the update writes the FOLDED
+    segment in-line — the committed delta segments' staging rows plus
+    the batch become one segment-1 list per term, committed together
+    with the batch's doc stats by one journaled rename set (the same
+    segment writer as `compact_deltas`).  Read amplification stays
+    bounded without anyone scheduling compactions by hand, at
+    O(live deltas) per fold (base parts are never re-read).  None
+    (default) keeps the policy manual.
 
     Why this exists: `update_index_incremental` rebuilds every touched
     term's FULL list.  On any Zipfian corpus a batch of new docs
@@ -1695,6 +1732,9 @@ def update_index_delta(
     fold back at compaction.
 
     Mechanics in this layout:
+    - One pass over the batch: it is tokenized once into cached
+      ``(doc_id, term, tf, doc_len)`` rows; the doc stats, the batch
+      scalars and the chunks all derive from them.
     - The delta's chunks land in ``index.parquet/part=<num_parts+seg>``
       (and its staging rows in the same-numbered staging part).  A
       term's list is then the CONCATENATION of its base chunks and its
@@ -1707,11 +1747,11 @@ def update_index_delta(
       recomputes over base+delta; per-chunk pruning bounds are
       segment-local and stay admissible as encoded (stale-avg_len
       inflation applies per part exactly like incremental updates).
-    - ANS-family codecs train PER-SEGMENT models on the delta batch
-      (short delta lists select block-stat buckets the base models
-      never saw, so frozen-model coverage would fail for almost any
-      small batch); models.pkl carries ``delta_models[seg]`` and every
-      decode path routes by the segment embedded in chunk_id
+    - ANS-family codecs train PER-SEGMENT models on the staged delta
+      chunks (short delta lists select block-stat buckets the base
+      models never saw, so frozen-model coverage would fail for almost
+      any small batch); models.pkl carries ``delta_models[seg]`` and
+      every decode path routes by the segment embedded in chunk_id
       (build.decode_lists_segmented).  EF families pin a PER-SEGMENT
       docID universe instead (``delta_universes[seg]`` — the same
       mechanism concat merges use): each segment's payloads stay laid
@@ -1719,18 +1759,23 @@ def update_index_delta(
       keeps the base build's, and decode routes by segment exactly
       like models — so every one of the 16 codec families takes the
       O(batch) path.
-    - Crash safety: all writes are deterministic directory swaps keyed
-      by the segment number (which only advances in the manifest at
-      the very end), doc stats append LAST, so a replay of the same
-      batch overwrites the same directories — idempotent like the
-      in-place path; the stats-mismatch finalize recovery is shared.
+    - Crash safety: a plain update's writes are deterministic directory
+      swaps keyed by the segment number (which only advances in the
+      manifest at the very end), doc stats append LAST, so a replay of
+      the same batch overwrites the same directories — idempotent like
+      the in-place path; the stats-mismatch finalize recovery is
+      shared.  A folding update builds its whole new state in scratch
+      paths and commits once through `_commit_renames`: a crash
+      before the journal leaves the old state (batch absent) fully
+      live, a crash after it rolls forward.
     - `update_index_incremental` REFUSES while deltas exist (its
       per-part keep/merge logic cannot see delta rows); run
       `compact_index` first — it folds deltas back into the hash
       parts, re-chunks the affected terms, and re-encodes everything.
     """
     import pickle
-    import shutil
+
+    import pyarrow as pa
 
     from partitioned_ef_ans_spark.session import ship_package
 
@@ -1746,7 +1791,14 @@ def update_index_delta(
         side = pickle.load(fh)
     codec = side["codec"]
     num_parts = int(man["num_parts"])
-    chunk_postings = int(man["chunk_postings"])
+
+    # ---- the committed corpus, from DISK truth: one aggregate over
+    # doc_stats (a doc is committed iff its stats row landed)
+    orow = spark.read.parquet(stats_path).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("len"),
+        F.max("doc_id").alias("mx"),
+    ).collect()[0]
+    old_n, old_len, old_max = int(orow["n"]), int(orow["len"] or 0), orow["mx"]
 
     # ---- segment numbering from DISK truth, not just the manifest: a
     # prior delta that crashed between its doc-stats append and its
@@ -1757,7 +1809,6 @@ def update_index_delta(
     # doc_stats (max last_doc <= stats max); an UNcommitted on-disk
     # segment (crash before the stats append) is exactly the replay
     # case the deterministic same-number overwrite is designed for.
-    old_max = spark.read.parquet(stats_path).agg(F.max("doc_id")).collect()[0][0]
     committed = int(man.get("delta_segments", 0))
     for pid in _live_delta_pids(out_dir, num_parts):
         s = pid - num_parts + 1
@@ -1786,84 +1837,107 @@ def update_index_delta(
     # ---- freshness / replay filtering (same discipline as in-place)
     if skip_stale and old_max is not None:
         new_docs = new_docs.where(F.col(doc_col) > old_max)
-    new_min = new_docs.agg(F.min(F.col(doc_col))).collect()[0][0]
-    if new_min is None:
-        srow = spark.read.parquet(stats_path).agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avg"),
-            F.max("doc_id").alias("mx"),
-        ).collect()[0]
-        if int(srow["n"]) != int(man["num_docs"]) or committed != int(
-            man.get("delta_segments", 0)
-        ):
-            uni = max(
-                int(man.get("universe", man["num_docs"])),
-                int(srow["mx"]) + 1 if srow["mx"] is not None else 0,
+    # ---- tokenize ONCE (same token rule the index was built with —
+    # shingle indexes delta-update like any other)
+    tf = _batch_tf(
+        new_docs, doc_col, text_col, int(man.get("ngram", 1))
+    ).cache()
+    try:
+        lens = tf.select("doc_id", "doc_len").distinct().toArrow()
+        if lens.num_rows == 0:
+            if old_n != int(man["num_docs"]) or committed != int(
+                man.get("delta_segments", 0)
+            ):
+                # a prior update crashed between its stats append and
+                # its sidecar refresh — finalize it now
+                uni = max(
+                    int(man.get("universe", man["num_docs"])),
+                    int(old_max) + 1 if old_max is not None else 0,
+                )
+                return _refresh_sidecars(
+                    spark, out_dir, man, old_n,
+                    old_len / old_n if old_n else 0.0,
+                    {
+                        "recovered_finalize": True,
+                        "universe": uni,
+                        # re-arm the counter the crashed finalize never
+                        # wrote (also re-arms update_index_incremental's
+                        # live-delta refusal)
+                        "delta_segments": committed,
+                    },
+                )
+            return {**man, "update_sec": 0.0, "parts_reencoded": 0}
+        ids = lens.column("doc_id").to_numpy()
+        doc_lens = lens.column("doc_len").to_numpy()
+        if old_max is not None and int(ids.min()) <= int(old_max):
+            raise ValueError(
+                f"delta update needs fresh doc_ids (> {old_max}), got "
+                f"min {int(ids.min())}"
             )
-            return _refresh_sidecars(
-                spark, out_dir, man, int(srow["n"]), float(srow["avg"]),
-                {
-                    "recovered_finalize": True,
-                    "universe": uni,
-                    # re-arm the counter the crashed finalize never
-                    # wrote (also re-arms update_index_incremental's
-                    # live-delta refusal)
-                    "delta_segments": committed,
-                },
-            )
-        return {**man, "update_sec": 0.0, "parts_reencoded": 0}
-    if old_max is not None and new_min <= old_max:
-        raise ValueError(
-            f"delta update needs fresh doc_ids (> {old_max}), got min {new_min}"
+        # the batch scalars and the new global ones, on the driver
+        # (integer length sums: avg is the same double Spark's avg
+        # computes over the appended doc_stats)
+        batch_len = int(doc_lens.sum())
+        num_docs = old_n + len(ids)
+        avg_len = (old_len + batch_len) / num_docs
+        universe = max(
+            int(man.get("universe", man["num_docs"])), int(ids.max()) + 1
+        )
+        # the batch's doc stats, normalized by the BATCH average exactly
+        # like build_doc_stats (a local relation: no Spark job until
+        # it is written)
+        stats_new = spark.createDataFrame(
+            pa.table({"doc_id": ids, "doc_len": doc_lens})
+        ).select(
+            "doc_id", "doc_len",
+            (F.col("doc_len").cast("double") / F.lit(batch_len / len(ids)))
+            .alias("norm_len"),
+        )
+        tf_batch = tf.where(F.col("term").isNotNull()).select(
+            "doc_id", "term", "tf", "doc_len"
         )
 
-    # ---- delta postings: the batch alone, chunked and encoded
-    # (same token rule the index was built with — shingle indexes
-    # delta-update like any other)
-    from partitioned_ef_ans_spark.tokenizer import tokenize_ngram
+        if max_segments is not None and committed >= 1 and seg > int(max_segments):
+            # ---- tiered-merge policy, in-line: the committed delta
+            # segments' staging rows plus the batch become ONE folded
+            # segment, committed with the batch's doc stats in one
+            # journal (the write of segment `seg` never happens)
+            committed_rows = spark.read.parquet(staging).where(
+                (F.col("part_id") >= num_parts) & (F.col("part_id") < delta_pid)
+            )
+            folded = _commit_fold(
+                spark, out_dir, man, side,
+                _staged_tf(committed_rows).unionByName(tf_batch),
+                num_docs=num_docs, avg_len=avg_len, universe=universe,
+                folded=seg, t0=t0, sec_key="update_sec", stats_new=stats_new,
+            )
+            folded["auto_minor_compacted"] = True
+            return folded
 
-    tf_new = term_frequencies(
-        tokenize_ngram(new_docs, doc_col=doc_col, text_col=text_col,
-                       ngram=int(man.get("ngram", 1)))
-    ).select("doc_id", "term", "tf")
-    stats_new = ds_mod.build_doc_stats(
-        new_docs.select(F.col(doc_col).alias("doc_id")), tf_new
-    )
-    stats_scratch = f"{out_dir}/.delta_stats.parquet"
-    stats_new.write.mode("overwrite").parquet(stats_scratch)
-    stats_new = spark.read.parquet(stats_scratch)
-    srow = spark.read.parquet(stats_path).unionByName(stats_new).agg(
-        F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avg"),
-        F.max("doc_id").alias("mx"),
-    ).collect()[0]
-    num_docs, avg_len = int(srow["n"]), float(srow["avg"] or 0.0)
-    universe = max(
-        int(man.get("universe", man["num_docs"])), int(srow["mx"]) + 1
-    )
+        # ---- write the segment: staging rows FIRST, then models and
+        # payloads both from the staged read (never the lazy plan)
+        part_staging = f"{staging}/part_id={delta_pid}"
+        _swap_dir_write(
+            p_mod.build_postings(
+                tf_batch, num_docs=universe,
+                chunk_postings=int(man["chunk_postings"]),
+            ).withColumn(
+                # chunk ids above every base id: (term, chunk_id)
+                # ordering == doc order across segments (fresh ids >
+                # all base ids)
+                "chunk_id", (F.lit(seg << 20) + F.col("chunk_id")).cast("int")
+            ),
+            part_staging,
+        )
+    finally:
+        tf.unpersist()
+    chunks = spark.read.parquet(part_staging)
 
-    chunks = p_mod.build_postings(
-        tf_new, num_docs=universe, chunk_postings=chunk_postings,
-        doc_norms=stats_new,
-    ).withColumn(
-        # chunk ids above every base id: (term, chunk_id) ordering ==
-        # doc order across segments (fresh ids > all base ids)
-        "chunk_id", (F.lit(seg << 20) + F.col("chunk_id")).cast("int")
-    )
-
-    # ---- per-SEGMENT models: the delta trains its OWN ANS models on
-    # its own batch (short delta lists select block-stat buckets the
-    # base models never saw, so frozen-model coverage would fail for
-    # almost any small batch) — decode routes by the segment embedded
+    # ---- per-SEGMENT models — decode routes by the segment embedded
     # in chunk_id.  models.pkl gains delta_models[seg] BEFORE the index
     # part becomes visible: a crash in between leaves unused models
     # (harmless); the replay retrains deterministically and overwrites.
-    seg_models = None
-    if codec in b_mod.ANS_CODEC_VARIANTS:
-        seg_models = b_mod.train_ans_models(
-            chunks, variant=b_mod.ANS_CODEC_VARIANTS[codec]
-        )
-    elif codec == "ans_packed":
-        seg_models = b_mod.train_ans_packed_models(chunks)
-    enc_models = seg_models if seg_models is not None else side["models"]
+    seg_models = _segment_models(codec, chunks)
     side_dirty = False
     if seg_models is not None:
         side.setdefault("delta_models", {})[seg] = seg_models
@@ -1885,43 +1959,29 @@ def update_index_delta(
         with open(f"{out_dir}/models.pkl", "wb") as fh:
             pickle.dump(side, fh)
 
-    # ---- write the segment: staging rows, encoded chunks, checkpoint
-    _swap_dir_write(
-        chunks, f"{staging}/part_id={delta_pid}"
+    codec_bc = spark.sparkContext.broadcast(b_mod.IndexCodec(
+        codec, seg_models if seg_models is not None else side["models"],
+        num_docs=universe,
+    ))
+    postings, nbytes = _encode_to(
+        chunks, codec_bc, avg_len,
+        f"{out_dir}/index.parquet/part={delta_pid}",
     )
-    codec_bundle = b_mod.IndexCodec(codec, enc_models, num_docs=universe)
-    codec_bc = spark.sparkContext.broadcast(codec_bundle)
-    idx_dir = f"{out_dir}/index.parquet/part={delta_pid}"
-    enc = spark.read.parquet(f"{staging}/part_id={delta_pid}").mapInPandas(
-        b_mod._encode_factory(codec_bc, avg_len), schema=b_mod.INDEX_SCHEMA
-    )
-    _swap_dir_write(enc, idx_dir)
-    stats_row = spark.read.parquet(idx_dir).agg(
-        F.sum("n").alias("postings"), F.sum(F.length("payload")).alias("bytes")
-    ).collect()[0]
-    done: dict[int, dict] = {}
-    ckpt_path = f"{out_dir}/checkpoints.jsonl"
-    if os.path.exists(ckpt_path):
-        with open(ckpt_path) as fh:
-            for line in fh:
-                rec = json.loads(line)
-                done[int(rec["part_id"])] = rec
+    done = _read_ckpt(out_dir)
     done[delta_pid] = {
         "part_id": delta_pid,
-        "postings": int(stats_row["postings"] or 0),
-        "payload_bytes": int(stats_row["bytes"] or 0),
+        "postings": postings,
+        "payload_bytes": nbytes,
         "elapsed_sec": round(time.perf_counter() - t0, 3),
         "codec": codec,
         "avg_len_at_encode": avg_len,
         "delta_segment": seg,
     }
-    with open(ckpt_path, "w") as fh:
-        for pid in sorted(done):
-            fh.write(json.dumps(done[pid]) + "\n")
+    _write_ckpt(f"{out_dir}/checkpoints.jsonl", done)
 
     # ---- doc stats visible LAST (replay filter), then sidecars
     stats_new.write.mode("append").parquet(stats_path)
-    man = _refresh_sidecars(
+    return _refresh_sidecars(
         spark, out_dir, man, num_docs, avg_len,
         dict(
             universe=universe,
@@ -1930,114 +1990,74 @@ def update_index_delta(
             parts_reencoded=0,
         ),
     )
-    shutil.rmtree(stats_scratch, ignore_errors=True)
-
-    # ---- tiered-merge policy: fold when the segment count exceeds
-    # the budget.  __wrapped__ because the writer lock is held and
-    # non-reentrant; the update above is fully committed first, so a
-    # crash inside the fold loses nothing (roll-forward on replay).
-    if max_segments is not None and int(man.get("delta_segments", 0)) > int(max_segments):
-        # __wrapped__ bypasses _locked's entry refresh, but the fold
-        # re-reads doc_stats/staging this very update just appended to
-        # — refresh first or a caller-cached frame serves the
-        # pre-delta view (the exact aliasing _refresh_path exists for)
-        _refresh_path(spark, out_dir)
-        folded = compact_deltas.__wrapped__(spark, out_dir)
-        if folded.get("folded_segments"):
-            folded["auto_minor_compacted"] = True
-            man = folded
-    return man
 
 
-@_locked
-def compact_deltas(spark: SparkSession, out_dir: str) -> dict:
-    """MINOR compaction: fold all live delta segments into ONE fresh
-    segment — O(live delta postings), never O(index).  The Lucene
-    tiered-merge middle ground between O(batch) delta updates and the
-    O(index) `compact_index`: the read-side segment count (and its
-    measured per-chunk amplification, BENCH.md) stays bounded while
-    base parts are never read, re-encoded, or re-chunked.
+def _batch_tf(docs: DataFrame, doc_col: str, text_col: str, ngram: int) -> DataFrame:
+    """A delta batch's ``(doc_id, doc_len, term, tf)`` rows from one
+    tokenization pass (the index's token rule).  A doc without tokens
+    keeps one row with a null term and tf 0, so the per-doc lengths —
+    empty docs included, as in build_doc_stats — come from the same
+    rows as the postings."""
+    from partitioned_ef_ans_spark.tokenizer import shingles_array, tokens_array
 
-    The folded segment re-chunks every delta term's postings into one
-    doc-ordered list (it becomes segment 1: every delta id is greater
-    than every base id, so (term, chunk_id) order stays doc order) and
-    ANS families train fresh models on the folded batch.  Per-segment
-    EF universes of folded segments collapse — the new segment encodes
-    under the manifest universe (segment 0's pinned universe, if any,
-    is kept).  Tombstones are untouched: masked postings ride along
-    and only the major compaction purges them.
+    text = F.col(text_col)
+    arr = tokens_array(text) if ngram <= 1 else shingles_array(text, ngram)
+    return docs.select(
+        F.col(doc_col).alias("doc_id"),
+        F.coalesce(arr, F.array().cast("array<string>")).alias("toks"),
+    ).select(
+        "doc_id",
+        F.size("toks").cast("long").alias("doc_len"),
+        F.explode_outer("toks").alias("term"),
+    ).groupBy("doc_id", "doc_len", "term").agg(
+        F.count("term").cast("int").alias("tf")
+    )
+
+
+def _commit_fold(
+    spark: SparkSession, out_dir: str, man: dict, side: dict, tf: DataFrame,
+    *, num_docs: int, avg_len: float, universe: int, folded: int,
+    t0: float, sec_key: str, stats_new: DataFrame | None = None,
+) -> dict:
+    """Write the delta postings ``tf`` (``term, doc_id, tf, doc_len``)
+    as the ONE folded segment 1 and commit it with a single journaled
+    rename set — the segment writer of `compact_deltas` and of the
+    in-line fold in `update_index_delta`.
+
+    Every delta term's postings re-chunk into one doc-ordered list
+    (segment 1: every delta id is greater than every base id, so
+    (term, chunk_id) order stays doc order) and ANS families train
+    fresh models on the staged fold.  Per-segment EF universes of
+    folded segments collapse — the new segment encodes under
+    ``universe`` (segment 0's pinned universe, if any, is kept).
+    ``stats_new`` (an update's batch) joins the commit as a scratch
+    doc_stats: the live files hardlinked plus the batch's, so the new
+    postings and their stats become visible together.
 
     Crash safety: whole-tree scratch + the same journaled rename
     commit as compact_index — old state fully live until the commit,
     roll-forward on replay."""
     import pickle
 
-    from partitioned_ef_ans_spark.session import ship_package
-
-    ship_package(spark)
-    t0 = time.perf_counter()
-    staging = f"{out_dir}/staging_postings.parquet"
-    _recover_commit(out_dir)
-    _recover_swaps([staging, f"{out_dir}/index.parquet", out_dir])
-    with open(f"{out_dir}/manifest.json") as fh:
-        man = json.load(fh)
     num_parts = int(man["num_parts"])
-    with open(f"{out_dir}/models.pkl", "rb") as fh:
-        side = pickle.load(fh)
     codec = side["codec"]
-    delta_pids = _live_delta_pids(out_dir, num_parts)
-    if len(delta_pids) <= 1:
-        return {**man, "minor_compact_sec": 0.0, "folded_segments": 0}
-
-    stats_df = spark.read.parquet(f"{out_dir}/doc_stats.parquet")
-    srow = stats_df.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avg"),
-        F.max("doc_id").alias("mx"),
-    ).collect()[0]
-    num_docs, avg_len = int(srow["n"]), float(srow["avg"] or 0.0)
-    universe = max(
-        int(man.get("universe", man["num_docs"])),
-        int(srow["mx"]) + 1 if srow["mx"] is not None else 0,
-    )
-    staged = spark.read.parquet(staging)
-    deltas = staged.where(F.col("part_id") >= num_parts)
-    dmx = deltas.agg(F.max(F.array_max("doc_ids"))).collect()[0][0]
-    if dmx is not None and int(dmx) >= universe:
-        raise RuntimeError(
-            f"delta staging contains doc_id {dmx} beyond the stats "
-            f"universe {universe} — an interrupted update left postings "
-            "without their doc stats; replay the interrupted batch "
-            "first (replays are exact) before compacting"
-        )
-
-    # ---- fold: all delta postings re-chunk into one segment-1 list
-    # per term ((term, doc_id) unique across staging by invariant)
-    tf_d = deltas.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "freqs")).alias("z")
-    ).select(
-        "term",
-        F.col("z.doc_ids").alias("doc_id"),
-        F.col("z.freqs").cast("int").alias("tf"),
-    )
-    chunks = p_mod.build_postings(
-        tf_d, num_docs=universe,
-        chunk_postings=int(man["chunk_postings"]), doc_norms=stats_df,
-    ).withColumn("chunk_id", (F.lit(1 << 20) + F.col("chunk_id")).cast("int"))
-
+    staging = f"{out_dir}/staging_postings.parquet"
     tgt_pid = num_parts  # segment 1's part
     sc_staging = f"{out_dir}/.minor_staging"
     sc_index = f"{out_dir}/.minor_index"
     sc_models = f"{out_dir}/.minor_models.pkl"
     sc_ckpt = f"{out_dir}/.minor_ckpt.jsonl"
     sc_tstats = f"{out_dir}/.minor_term_stats"
+    sc_dstats = f"{out_dir}/.minor_doc_stats"
     sc_man = f"{out_dir}/.minor_manifest.json"
-    for d in (sc_staging, sc_index, sc_tstats):
+    for d in (sc_staging, sc_index, sc_tstats, sc_dstats):
         shutil.rmtree(d, ignore_errors=True)
     for f in (sc_models, sc_ckpt, sc_man):
         if os.path.exists(f):
             os.remove(f)
 
-    # scratch staging: base parts hardlinked, folded part written
+    # scratch staging: base parts hardlinked, folded part written FIRST
+    # — models and payloads both come from its read
     os.makedirs(sc_staging)
     for pid in range(num_parts):
         src = f"{staging}/part_id={pid}"
@@ -2050,18 +2070,15 @@ def compact_deltas(spark: SparkSession, out_dir: str) -> dict:
                 os.link(src, os.path.join(sc_staging, name))
             except OSError:
                 shutil.copy2(src, os.path.join(sc_staging, name))
-    chunks.write.mode("overwrite").parquet(f"{sc_staging}/part_id={tgt_pid}")
+    p_mod.build_postings(
+        tf, num_docs=universe, chunk_postings=int(man["chunk_postings"]),
+    ).withColumn(
+        "chunk_id", (F.lit(1 << 20) + F.col("chunk_id")).cast("int")
+    ).write.mode("overwrite").parquet(f"{sc_staging}/part_id={tgt_pid}")
     chunks = spark.read.parquet(f"{sc_staging}/part_id={tgt_pid}")
 
     # fresh models for the folded segment (short-list block stats)
-    seg_models = None
-    if codec in b_mod.ANS_CODEC_VARIANTS:
-        seg_models = b_mod.train_ans_models(
-            chunks, variant=b_mod.ANS_CODEC_VARIANTS[codec]
-        )
-    elif codec == "ans_packed":
-        seg_models = b_mod.train_ans_packed_models(chunks)
-    enc_models = seg_models if seg_models is not None else side["models"]
+    seg_models = _segment_models(codec, chunks)
 
     # scratch index: base part dirs hardlinked, folded segment encoded
     os.makedirs(sc_index)
@@ -2069,36 +2086,27 @@ def compact_deltas(spark: SparkSession, out_dir: str) -> dict:
         src = f"{out_dir}/index.parquet/part={pid}"
         if os.path.isdir(src):
             _link_tree(src, f"{sc_index}/part={pid}")
-    codec_bc = spark.sparkContext.broadcast(
-        b_mod.IndexCodec(codec, enc_models, num_docs=universe)
+    codec_bc = spark.sparkContext.broadcast(b_mod.IndexCodec(
+        codec, seg_models if seg_models is not None else side["models"],
+        num_docs=universe,
+    ))
+    postings, nbytes = _encode_to(
+        chunks, codec_bc, avg_len, f"{sc_index}/part={tgt_pid}"
     )
-    chunks.mapInPandas(
-        b_mod._encode_factory(codec_bc, avg_len), schema=b_mod.INDEX_SCHEMA
-    ).write.mode("overwrite").parquet(f"{sc_index}/part={tgt_pid}")
-    prow = spark.read.parquet(f"{sc_index}/part={tgt_pid}").agg(
-        F.sum("n").alias("postings"), F.sum(F.length("payload")).alias("bytes")
-    ).collect()[0]
 
     # checkpoints: base records kept verbatim, folded record replaces
     # every delta record (their avg_len_at_encode scaling with them)
-    done: dict[int, dict] = {}
-    with open(f"{out_dir}/checkpoints.jsonl") as fh:
-        for line in fh:
-            rec = json.loads(line)
-            if int(rec["part_id"]) < num_parts:
-                done[int(rec["part_id"])] = rec
+    done = {p: r for p, r in _read_ckpt(out_dir).items() if p < num_parts}
     done[tgt_pid] = {
         "part_id": tgt_pid,
-        "postings": int(prow["postings"] or 0),
-        "payload_bytes": int(prow["bytes"] or 0),
+        "postings": postings,
+        "payload_bytes": nbytes,
         "codec": codec,
         "avg_len_at_encode": avg_len,
         "delta_segment": 1,
-        "folded_segments": len(delta_pids),
+        "folded_segments": folded,
     }
-    with open(sc_ckpt, "w") as fh:
-        for pid in sorted(done):
-            fh.write(json.dumps(done[pid]) + "\n")
+    _write_ckpt(sc_ckpt, done)
     side_out = {"codec": codec, "models": side["models"]}
     if seg_models is not None:
         side_out["delta_models"] = {1: seg_models}
@@ -2119,45 +2127,97 @@ def compact_deltas(spark: SparkSession, out_dir: str) -> dict:
         pickle.dump(side_out, fh)
 
     # term_stats from the scratch view with bound scales from the NEW
-    # checkpoint records (stale base parts must stay upper bounds)
+    # checkpoint records (stale base parts must stay upper bounds) —
+    # refrozen over the whole index: the scales move with avg_len
     total_new = spark.read.parquet(sc_index)
-    scales = {
-        int(p): (avg_len / r["avg_len_at_encode"]) * (1.0 + 1e-6)
-        for p, r in done.items()
-        if r.get("avg_len_at_encode") and avg_len > r["avg_len_at_encode"]
-    }
+    scales = _bound_scales(done, avg_len)
     if scales:
         total_new = b_mod.apply_bound_scales(total_new, scales)
     b_mod.term_stats_agg(total_new).write.mode("overwrite").parquet(sc_tstats)
-    agg = spark.read.parquet(sc_tstats).agg(
-        F.sum("postings").alias("postings"),
-        F.sum("payload_bytes").alias("bytes"),
-    ).collect()[0]
-    man_new = dict(man)
-    man_new.update(
-        num_docs=num_docs,
-        avg_doc_len=avg_len,
-        total_postings=int(agg["postings"] or 0),
-        payload_bytes=int(agg["bytes"] or 0),
-        bits_per_posting=int(agg["bytes"] or 0) * 8 / int(agg["postings"] or 1),
-        universe=universe,
-        delta_segments=1,
-        minor_compactions=int(man.get("minor_compactions", 0)) + 1,
-        minor_compact_sec=round(time.perf_counter() - t0, 3),
-        folded_segments=len(delta_pids),
-    )
-    with open(sc_man, "w") as fh:
-        json.dump(man_new, fh, indent=2)
-
-    _commit_renames(out_dir, [
+    renames = [
         (sc_staging, staging),
         (sc_index, f"{out_dir}/index.parquet"),
         (sc_models, f"{out_dir}/models.pkl"),
         (sc_ckpt, f"{out_dir}/checkpoints.jsonl"),
         (sc_tstats, f"{out_dir}/term_stats.parquet"),
-        (sc_man, f"{out_dir}/manifest.json"),
-    ])
+    ]
+    if stats_new is not None:
+        _link_tree(f"{out_dir}/doc_stats.parquet", sc_dstats)
+        stats_new.write.mode("append").parquet(sc_dstats)
+        renames.append((sc_dstats, f"{out_dir}/doc_stats.parquet"))
+
+    man_new = dict(man)
+    man_new.update(
+        num_docs=num_docs,
+        avg_doc_len=avg_len,
+        **_ckpt_totals(done),
+        universe=universe,
+        delta_segments=1,
+        minor_compactions=int(man.get("minor_compactions", 0)) + 1,
+        folded_segments=folded,
+    )
+    man_new[sec_key] = round(time.perf_counter() - t0, 3)
+    with open(sc_man, "w") as fh:
+        json.dump(man_new, fh, indent=2)
+    renames.append((sc_man, f"{out_dir}/manifest.json"))
+    _commit_renames(out_dir, renames)
     return man_new
+
+
+@_locked
+def compact_deltas(spark: SparkSession, out_dir: str) -> dict:
+    """MINOR compaction: fold all live delta segments into ONE fresh
+    segment — O(live delta postings), never O(index).  The Lucene
+    tiered-merge middle ground between O(batch) delta updates and the
+    O(index) `compact_index`: the read-side segment count (and its
+    measured per-chunk amplification, BENCH.md) stays bounded while
+    base parts are never read, re-encoded, or re-chunked.  The folded
+    segment is written by `_commit_fold` (shared with the in-line fold
+    of `update_index_delta` ``max_segments``).  Tombstones are
+    untouched: masked postings ride along and only the major
+    compaction purges them."""
+    import pickle
+
+    from partitioned_ef_ans_spark.session import ship_package
+
+    ship_package(spark)
+    t0 = time.perf_counter()
+    staging = f"{out_dir}/staging_postings.parquet"
+    _recover_commit(out_dir)
+    _recover_swaps([staging, f"{out_dir}/index.parquet", out_dir])
+    with open(f"{out_dir}/manifest.json") as fh:
+        man = json.load(fh)
+    num_parts = int(man["num_parts"])
+    with open(f"{out_dir}/models.pkl", "rb") as fh:
+        side = pickle.load(fh)
+    delta_pids = _live_delta_pids(out_dir, num_parts)
+    if len(delta_pids) <= 1:
+        return {**man, "minor_compact_sec": 0.0, "folded_segments": 0}
+
+    srow = spark.read.parquet(f"{out_dir}/doc_stats.parquet").agg(
+        F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avg"),
+        F.max("doc_id").alias("mx"),
+    ).collect()[0]
+    universe = max(
+        int(man.get("universe", man["num_docs"])),
+        int(srow["mx"]) + 1 if srow["mx"] is not None else 0,
+    )
+    deltas = spark.read.parquet(staging).where(F.col("part_id") >= num_parts)
+    dmx = deltas.agg(F.max(F.array_max("doc_ids"))).collect()[0][0]
+    if dmx is not None and int(dmx) >= universe:
+        raise RuntimeError(
+            f"delta staging contains doc_id {dmx} beyond the stats "
+            f"universe {universe} — an interrupted update left postings "
+            "without their doc stats; replay the interrupted batch "
+            "first (replays are exact) before compacting"
+        )
+    # ((term, doc_id) unique across staging by invariant)
+    return _commit_fold(
+        spark, out_dir, man, side, _staged_tf(deltas),
+        num_docs=int(srow["n"]), avg_len=float(srow["avg"] or 0.0),
+        universe=universe, folded=len(delta_pids), t0=t0,
+        sec_key="minor_compact_sec",
+    )
 
 
 @_locked

@@ -71,7 +71,10 @@ def build_postings(
     is recomputed exactly wherever needed (integer sums < 2^53 are
     exact in double, so avg_len — and hence the norm — is the same
     double in Spark, DuckDB and the kernels), and bit-packed ints cost
-    a fraction of raw doubles in shuffle and parquet I/O.
+    a fraction of raw doubles in shuffle and parquet I/O.  A ``tf``
+    that already carries a ``doc_len`` column (the delta update and the
+    segment fold, whose rows come with their lengths) is chunked with
+    it as-is, no join.
     """
     dfs = term_doc_freqs(tf)
     dfs = dfs.withColumn(
@@ -91,6 +94,9 @@ def build_postings(
             ),
             "doc_id",
         )
+        struct_cols.append("doc_len")
+    elif "doc_len" in tf.columns:
+        joined = joined.withColumn("doc_len", F.col("doc_len").cast("int"))
         struct_cols.append("doc_len")
     chunked = joined.withColumn(
         "chunk_id", (F.col("doc_id") / F.col("doc_stride")).cast("int")
@@ -114,7 +120,7 @@ def build_postings(
         F.col("plist.doc_id").alias("doc_ids"),
         F.col("plist.tf").alias("freqs"),
     ]
-    if doc_norms is not None:
+    if "doc_len" in struct_cols:
         out_cols.append(F.col("plist.doc_len").alias("doc_lens"))
     out = lists.select(*out_cols)
     if dictionary is not None:

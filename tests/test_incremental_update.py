@@ -1226,3 +1226,211 @@ def test_minor_compact_crash_safety(spark, tmp_path, monkeypatch):
     assert not os.path.isdir(f"{d}/index.parquet/part={NUM_PARTS + 1}")
     assert not os.path.exists(f"{d}/.commit_journal.json")
     assert _ranked(spark, d, qs, "blockmax") == pre
+
+
+def _count_jobs(spark, group, fn):
+    """(result, Spark jobs) of ``fn()``, counted under its own job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs one delta update may run, plain or folding (19 and 20
+#: here; the re-tokenizing update that committed a segment and then
+#: ran compact_deltas took 43 and 67 on this fixture)
+UPDATE_JOB_BUDGET = 20
+
+
+def test_delta_update_job_budget(spark, tmp_path):
+    """One pass over the batch: a plain delta update and the folding
+    one after it (max_segments=1, the fold written in-line) each stay
+    within the job budget."""
+    from partitioned_ef_ans_spark.index.checkpoint import (
+        build_index_resumable,
+        update_index_delta,
+    )
+
+    by_part = _vocab_by_part()
+    d = str(tmp_path / "idx")
+    build_index_resumable(
+        spark, _mk_docs(spark, _corpus_a(by_part)), d, codec="ans",
+        num_parts=NUM_PARTS, chunk_postings=CHUNK,
+    )
+    jobs = []
+    for i in range(2):
+        rows = _corpus_delta(by_part, base=40 + 24 * i)
+        man, n = _count_jobs(
+            spark, f"delta_update_{i}",
+            lambda: update_index_delta(
+                spark, d, _mk_docs(spark, rows), max_segments=1
+            ),
+        )
+        jobs.append(n)
+        assert bool(man.get("auto_minor_compacted")) == (i == 1)
+    assert max(jobs) <= UPDATE_JOB_BUDGET, jobs
+
+
+def _fold_state(spark, d):
+    """Everything a fold commits, order-free: staging and index rows,
+    doc and term stats, the segment models/universes, and the
+    manifest's corpus scalars and size totals."""
+    import pickle
+
+    def rows(name, *cols):
+        df = spark.read.parquet(f"{d}/{name}")
+        return sorted(tuple(r) for r in (df.select(*cols) if cols else df).collect())
+
+    with open(f"{d}/models.pkl", "rb") as fh:
+        side = pickle.load(fh)
+    with open(f"{d}/manifest.json") as fh:
+        man = json.load(fh)
+    keys = (
+        "num_docs", "avg_doc_len", "universe", "delta_segments",
+        "total_postings", "payload_bytes", "bits_per_posting",
+    )
+    return {
+        "staging": rows("staging_postings.parquet"),
+        "index": rows("index.parquet"),
+        "doc_stats": rows("doc_stats.parquet"),
+        # cf and num_chunks are term_stats' first-chunk diagnostics: for
+        # a term with base and delta chunks, which segment's value
+        # comes first depends on the aggregate's shuffle order
+        "term_stats": rows(
+            "term_stats.parquet",
+            "term", "df", "max_term_weight", "postings", "payload_bytes",
+        ),
+        "models": pickle.dumps(
+            (side.get("delta_models"), side.get("delta_universes"))
+        ),
+        "manifest": {k: man.get(k) for k in keys},
+    }
+
+
+@pytest.mark.parametrize("codec", ["ans", "pef"])
+def test_inline_fold_matches_compact_deltas_and_is_crash_safe(
+    spark, tmp_path, monkeypatch, codec
+):
+    """The fold written in-line by update_index_delta(max_segments=1)
+    commits exactly what a plain update plus compact_deltas commits
+    (same staging and index rows, models or EF universe pins, stats and
+    ranking), and commits it once: a crash before the journal leaves
+    the one-segment state live with the batch unserved and replays
+    exactly; a crash after it rolls forward with the batch's stats,
+    after which a skip_stale replay is a no-op."""
+    import partitioned_ef_ans_spark.index.checkpoint as cp
+
+    by_part = _vocab_by_part()
+    dirs = {k: str(tmp_path / k) for k in ("inline", "twin", "crash")}
+    for d in dirs.values():
+        cp.build_index_resumable(
+            spark, _mk_docs(spark, _corpus_a(by_part)), d, codec=codec,
+            num_parts=NUM_PARTS, chunk_postings=CHUNK,
+        )
+    # sparse id jumps between batches: an EF universe mix-up decodes
+    # garbage, not near-misses
+    rows_b = _corpus_delta(by_part, base=100, n=12)
+    rows_c = _corpus_delta(by_part, base=300, n=8)
+    rows_d = _corpus_delta(by_part, base=500, n=6)
+    qs = [
+        (0, [by_part[0][0], by_part[1][1]]),
+        (1, [by_part[2][0]]),
+        (2, [by_part[0][0], by_part[2][2], by_part[3][1]]),
+    ]
+
+    inline, twin, crash = dirs["inline"], dirs["twin"], dirs["crash"]
+    for d in (inline, crash):
+        cp.update_index_delta(spark, d, _mk_docs(spark, rows_b), max_segments=1)
+    man = cp.update_index_delta(
+        spark, inline, _mk_docs(spark, rows_c), max_segments=1
+    )
+    assert man["auto_minor_compacted"] and man["delta_segments"] == 1
+    cp.update_index_delta(spark, twin, _mk_docs(spark, rows_b))
+    cp.update_index_delta(spark, twin, _mk_docs(spark, rows_c))
+    assert cp.compact_deltas(spark, twin)["folded_segments"] == 2
+    folded = _fold_state(spark, inline)
+    assert folded == _fold_state(spark, twin)
+    for mode in ("blockmax", "ranked_or"):
+        assert _ranked(spark, inline, qs, mode) == _ranked(spark, twin, qs, mode)
+
+    # ---- crash BEFORE the journal: one segment, batch unserved
+    def boom(out_dir, pairs):
+        raise RuntimeError("injected pre-commit crash")
+
+    monkeypatch.setattr(cp, "_commit_renames", boom)
+    with pytest.raises(RuntimeError, match="injected pre-commit"):
+        cp.update_index_delta(
+            spark, crash, _mk_docs(spark, rows_c), max_segments=1
+        )
+    monkeypatch.undo()
+    with open(f"{crash}/manifest.json") as fh:
+        assert json.load(fh)["delta_segments"] == 1
+    ids_c = {r[0] for r in rows_c}
+    stats_ids = {
+        r["doc_id"]
+        for r in spark.read.parquet(f"{crash}/doc_stats.parquet").collect()
+    }
+    assert not ids_c & stats_ids
+    assert not ids_c & {doc for _t, doc, _f in _decode_flat_rows(spark, crash)}
+    # the replay of the same batch commits the first case's state
+    cp.update_index_delta(spark, crash, _mk_docs(spark, rows_c), max_segments=1)
+    assert _fold_state(spark, crash) == folded
+
+    # ---- crash AFTER the journal: the next locked op rolls forward
+    def crash_after_journal(out_dir, pairs):
+        with open(f"{out_dir}/.commit_journal.json", "w") as fh:
+            json.dump({"renames": [[s, t] for s, t in pairs]}, fh)
+        raise RuntimeError("injected mid-commit crash")
+
+    cp.update_index_delta(spark, inline, _mk_docs(spark, rows_d), max_segments=1)
+    monkeypatch.setattr(cp, "_commit_renames", crash_after_journal)
+    with pytest.raises(RuntimeError, match="injected mid-commit"):
+        cp.update_index_delta(
+            spark, crash, _mk_docs(spark, rows_d), max_segments=1
+        )
+    monkeypatch.undo()
+    cp._recover_commit(crash)
+    refolded = _fold_state(spark, inline)
+    assert _fold_state(spark, crash) == refolded
+    replay = cp.update_index_delta(
+        spark, crash, _mk_docs(spark, rows_d), skip_stale=True, max_segments=1
+    )
+    assert replay["update_sec"] == 0.0
+    assert _fold_state(spark, crash) == refolded
+    assert _ranked(spark, crash, qs, "blockmax") == _ranked(
+        spark, inline, qs, "blockmax"
+    )
+
+
+def test_refresh_path_tolerates_missing_path(spark, tmp_path):
+    """Refreshing a path that does not exist is a no-op, not an error
+    (the refresh runs unguarded: a failure there could freeze
+    term_stats without the new segments)."""
+    from partitioned_ef_ans_spark.index.checkpoint import _refresh_path
+
+    _refresh_path(spark, str(tmp_path / "never_written"))
+
+
+def test_segment_model_fanin_keeps_models(spark, tmp_path):
+    """The delta segments' driver-side merge of the count partials
+    (fanin=1) freezes the same models as the executor merge level the
+    builds use, and both equal the build's frozen models."""
+    import pickle
+
+    from partitioned_ef_ans_spark.index import build as b_mod
+    from partitioned_ef_ans_spark.index.checkpoint import build_index_resumable
+
+    d = str(tmp_path / "idx")
+    build_index_resumable(
+        spark, _mk_docs(spark, _corpus_a(_vocab_by_part())), d, codec="ans",
+        num_parts=NUM_PARTS, chunk_postings=CHUNK,
+    )
+    staged = spark.read.parquet(f"{d}/staging_postings.parquet")
+    with open(f"{d}/models.pkl", "rb") as fh:
+        built = pickle.dumps(pickle.load(fh)["models"])
+    assert pickle.dumps(b_mod.train_ans_models(staged)) == built
+    assert pickle.dumps(b_mod.train_ans_models(staged, fanin=1)) == built
