@@ -373,11 +373,12 @@ def qscaling_mode():
 
 
 def maintenance_mode():
-    """`bench.py --maintenance`: the incremental-update economics the
+    """`bench.py --maintenance`: the delta-update economics the
     correctness tests don't show — update wall/postings-per-sec vs
-    batch size, the update-vs-rebuild crossover, the bits/posting
-    drift across an update chain, and compaction restoring build-fresh
-    bpp.  One JSON line like every other mode."""
+    batch size, the segmented layout's read amplification, the
+    bits/posting drift of the delta chain against a fresh rebuild of
+    the same corpus, and compaction restoring build-fresh bpp.  One
+    JSON line like every other mode."""
     from pyspark.sql import functions as F
 
     from partitioned_ef_ans_spark import corpus as c_mod
@@ -385,7 +386,6 @@ def maintenance_mode():
         build_index_resumable,
         compact_index,
         update_index_delta,
-        update_index_incremental,
     )
     from partitioned_ef_ans_spark.session import get_spark
 
@@ -416,8 +416,8 @@ def maintenance_mode():
     n_total = corpus.count()
     pol_batches = int(os.environ.get("PEFA_MAINT_POLICY_BATCHES", "6"))
     pol_b = int(os.environ.get("PEFA_MAINT_POLICY_BATCH_DOCS", "200"))
-    # one chain for the delta path, one in-place, one policy chain
-    holdout = 2 * sum(batches) + pol_batches * pol_b
+    # one delta chain, one policy chain
+    holdout = sum(batches) + pol_batches * pol_b
     cut = n_total - holdout
 
     import shutil
@@ -503,59 +503,27 @@ def maintenance_mode():
     q["policy_auto_folds"] = pol_folds
     q["policy_latency_us"] = kernel_latency_stats(idx, lat_qs, modes=lat_modes)
 
+    # the alternative a user weighs the chain against: a fresh
+    # rebuild of the SAME corpus the chain has indexed so far; the
+    # drift compares it with the chain's last update (``m``)
+    idx_rb = f"{idx}_rebuild"
+    shutil.rmtree(idx_rb, ignore_errors=True)
+    t0 = time.perf_counter()
+    rb_m = build_index_resumable(
+        spark, corpus.where(F.col("doc_id") < lo), idx_rb, codec=maint_codec,
+        num_parts=16, chunk_postings=1 << 16,
+    )
+    q["full_rebuild_sec"] = round(time.perf_counter() - t0, 2)
+    q["fresh_bpp"] = round(rb_m["bits_per_posting"], 4)
+    q["bpp_drift_pct"] = round(
+        100.0 * (m["bits_per_posting"] / rb_m["bits_per_posting"] - 1.0), 3
+    )
+
     t0 = time.perf_counter()
     cm = compact_index(spark, idx)
     q["delta_fold_compact_sec"] = round(time.perf_counter() - t0, 2)
     q["delta_fold_bpp"] = round(cm["bits_per_posting"], 4)
     q["compacted_latency_us"] = kernel_latency_stats(idx, lat_qs, modes=lat_modes)
-
-    # ---- in-place chain (touched-vocabulary re-encode) on the
-    # compacted index — the update-vs-rebuild comparison the verdict
-    # asked for, with the delta path as the O(batch) alternative.
-    # PEFA_MAINT_SKIP_INPLACE=1 drops the O(index) legs (in-place
-    # chain, fresh rebuild, final compaction) so the mode stays
-    # affordable at the 144.5M-posting scale where only the
-    # size-independence of the delta/minor path is the question.
-    if os.environ.get("PEFA_MAINT_SKIP_INPLACE") == "1":
-        shutil.rmtree(idx, ignore_errors=True)
-        spark.stop()
-        _write_maint_json(q, batches)
-        return
-    prev_postings = cm["total_postings"]
-    for b in batches:
-        batch = corpus.where(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + b)
-        )
-        t0 = time.perf_counter()
-        m = update_index_incremental(spark, idx, batch)
-        dt = time.perf_counter() - t0
-        new_postings = m["total_postings"] - prev_postings
-        q[f"update_{b}_sec"] = round(dt, 2)
-        q[f"update_{b}_new_postings"] = int(new_postings)
-        q[f"update_{b}_new_postings_per_sec"] = round(new_postings / dt, 1)
-        q[f"update_{b}_bpp"] = round(m["bits_per_posting"], 4)
-        prev_postings = m["total_postings"]
-        lo += b
-
-    # the alternative a user weighs each update against: a full fresh
-    # rebuild of the SAME final corpus
-    idx_rb = f"{idx}_rebuild"
-    shutil.rmtree(idx_rb, ignore_errors=True)
-    t0 = time.perf_counter()
-    rb_m = build_index_resumable(
-        spark, corpus, idx_rb, codec=maint_codec, num_parts=16,
-        chunk_postings=1 << 16,
-    )
-    q["full_rebuild_sec"] = round(time.perf_counter() - t0, 2)
-    q["fresh_bpp"] = round(rb_m["bits_per_posting"], 4)
-    q["bpp_drift_pct"] = round(
-        100.0 * (q[f"update_{batches[-1]}_bpp"] / q["fresh_bpp"] - 1.0), 3
-    )
-
-    t0 = time.perf_counter()
-    cm = compact_index(spark, idx)
-    q["compact_sec"] = round(time.perf_counter() - t0, 2)
-    q["compacted_bpp"] = round(cm["bits_per_posting"], 4)
 
     shutil.rmtree(idx, ignore_errors=True)
     shutil.rmtree(idx_rb, ignore_errors=True)
@@ -564,10 +532,9 @@ def maintenance_mode():
 
 
 def _write_maint_json(q: dict, batches) -> None:
-    key = f"update_{batches[0]}_sec"
     out = {
         "metric": "incremental_maintenance",
-        "value": q.get(key, q.get(f"delta_{batches[0]}_sec")),
+        "value": q[f"delta_{batches[0]}_sec"],
         "unit": "sec",
         "queries": q,
         "sf": SF_DIR,

@@ -170,7 +170,7 @@ def cmd_create_freq_index(args) -> int:
     docs, doc_col, text_col = _read_corpus(spark, args.corpus, args)
     if args.resumable:
         # checkpointed per-part layout: survives preemption and is the
-        # layout `update_index` extends incrementally
+        # layout `update_index` extends with delta segments
         from partitioned_ef_ans_spark.index.checkpoint import (
             build_index_resumable,
         )
@@ -242,13 +242,15 @@ def cmd_create_wand_data(args) -> int:
     reference computes it from the collection + .sizes;
     wand_data.hpp:18-54).  Our chunks carry doc_lens + per-chunk max
     weights, so one vocabulary-sized aggregation reproduces
-    term_stats.parquet bit-for-bit."""
+    term_stats.parquet bit-for-bit — on a delta-updated index too:
+    every column is a sum or max over the term's chunks, so the
+    result depends on the index alone, not on shuffle order."""
     from partitioned_ef_ans_spark.index import build as b_mod
 
     spark = _spark(args)
-    # load_index (not a raw parquet read): for an incrementally
-    # updated index the stale parts' bounds must be inflated, or the
-    # re-derived max_term_weight would under-bound true BM25 weights
+    # load_index (not a raw parquet read): for a delta-updated index
+    # the stale parts' bounds must be inflated, or the re-derived
+    # max_term_weight would under-bound true BM25 weights
     index_df, _s, _t, _codec, _man = b_mod.load_index(spark, args.index_dir)
     b_mod.term_stats_agg(index_df).write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
@@ -286,22 +288,16 @@ def _require_resumable_layout(index_dir: str) -> None:
 
 
 def cmd_update_index(args) -> int:
-    """Fold new documents into an existing resumable-layout index:
-    in-place touched-vocabulary re-encode by default, or an O(batch)
-    LSM delta segment with ``--delta`` (compact periodically)."""
-    from partitioned_ef_ans_spark.index.checkpoint import (
-        update_index_delta,
-        update_index_incremental,
-    )
+    """Fold new documents into an existing resumable-layout index as an
+    O(batch) LSM delta segment (``compact`` folds segments back)."""
+    from partitioned_ef_ans_spark.index.checkpoint import update_index_delta
 
     _require_resumable_layout(args.index_dir)
     spark = _spark(args)
     docs, doc_col, text_col = _read_corpus(spark, args.corpus, args)
-    update = update_index_delta if args.delta else update_index_incremental
-    kw = {"max_segments": args.max_segments} if args.delta else {}
-    man = update(
-        spark, args.index_dir, docs,
-        doc_col=doc_col, text_col=text_col, skip_stale=args.skip_stale, **kw,
+    man = update_index_delta(
+        spark, args.index_dir, docs, doc_col=doc_col, text_col=text_col,
+        skip_stale=args.skip_stale, max_segments=args.max_segments,
     )
     print(json.dumps({
         "num_docs": man["num_docs"],
@@ -310,8 +306,6 @@ def cmd_update_index(args) -> int:
         "parts_reencoded": man.get("parts_reencoded"),
         "delta_segments": man.get("delta_segments"),
         "auto_minor_compacted": man.get("auto_minor_compacted"),
-        "model_drift_full_reencode": man.get("model_drift_full_reencode"),
-        "universe_drift_full_reencode": man.get("universe_drift_full_reencode"),
         "update_sec": man.get("update_sec"),
     }))
     _stop(spark)
@@ -319,9 +313,10 @@ def cmd_update_index(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Retrain models + full re-encode under the current corpus stats
-    (restores build-fresh compression and removes stale-bound
-    inflation after a chain of incremental updates).  ``--deltas-only``
+    """Retrain models + full re-encode under the current corpus stats:
+    folds every delta segment back into the single-segment layout,
+    restores build-fresh compression and removes stale-bound
+    inflation after a chain of delta updates.  ``--deltas-only``
     runs the MINOR compaction instead: fold the live delta segments
     into one in O(live deltas), base parts untouched."""
     from partitioned_ef_ans_spark.index.checkpoint import (
@@ -821,12 +816,8 @@ def build_parser() -> argparse.ArgumentParser:
     u.add_argument("--skip-stale", action="store_true",
                    help="silently drop already-indexed doc_ids "
                         "(at-least-once replay tolerance)")
-    u.add_argument("--delta", action="store_true",
-                   help="O(batch) LSM delta segment (own models) "
-                        "instead of the in-place touched-vocabulary "
-                        "re-encode; compact to fold segments back")
     u.add_argument("--max-segments", type=int, default=None,
-                   help="tiered-merge policy for --delta: minor-compact "
+                   help="tiered-merge policy: minor-compact "
                         "(fold segments into one, O(live deltas)) when "
                         "the stack exceeds this many segments")
     u.add_argument("--text-col", default="text")

@@ -286,30 +286,6 @@ def condense_models(counts: np.ndarray) -> np.ndarray:
     return remap_final
 
 
-def models_cover(enc, counts: np.ndarray) -> bool:
-    """True iff the frozen ``enc`` models can encode data with the
-    given raw (model, symbol) ``counts`` — every nonzero count must
-    map (through the condense remap) to a frame slot whose normalized
-    frequency is nonzero.  Raw model 0 (the dense/all-equal selector)
-    needs no frame.  Used by incremental index updates to decide
-    whether the build-frozen models still cover merged posting lists
-    (the reference trains on the full frozen collection,
-    create_freq_index.cpp:266-275, so it never faces this; drift
-    forces a retrain + full re-encode)."""
-    rm, sym = np.nonzero(counts)
-    keep = rm > 0
-    rm, sym = rm[keep], sym[keep]
-    if rm.size == 0:
-        return True
-    slots = enc.remap[rm].astype(np.int64)
-    ok = (
-        (slots > 0)
-        & (sym <= enc.max_value[slots])
-        & (enc.freq[slots, sym] > 0)
-    )
-    return bool(np.all(ok))
-
-
 def normalize_freqs(freqs: np.ndarray, target_power: int) -> np.ndarray:
     """Faithful port of normalize_freqs (ans_msb_util.hpp:237-297):
     fudge-factor scaling loop + backward excess redistribution; the

@@ -515,7 +515,7 @@ def build_index(
     stats_df = spark.read.parquet(f"{out_dir}/doc_stats.parquet")
     # the docID UNIVERSE (EF layout bound + chunk stride) is max_id+1,
     # NOT the doc count — equal for densely-assigned ids, but sparse
-    # ids (incremental updates only require freshness) would otherwise
+    # ids (delta updates only require freshness) would otherwise
     # overflow the EF higher-bits region and corrupt payloads
     universe = int(agg["mx"]) + 1 if agg["mx"] is not None else 0
     t_stats = time.perf_counter()
@@ -713,16 +713,14 @@ def term_stats_agg(index_df: DataFrame) -> DataFrame:
     """The frozen per-term WAND metadata (the reference's
     m_max_term_weight, wand_data.hpp:35-50,78-81) plus the per-term
     postings/bytes that make it the single source of the global
-    metrics — one vocabulary-sized aggregation, one index scan."""
+    metrics — one vocabulary-sized aggregation, one index scan.  Every
+    column is a sum or max over the term's chunks, so the result is a
+    function of the index alone, however its chunks are shuffled."""
     return index_df.groupBy("term").agg(
         # df == list length == sum of chunk sizes: stays correct when a
         # term's list spans delta SEGMENTS (chunk-row df is frozen at
         # its segment's build); identical to first(df) on a fresh index
         F.sum("n").cast("long").alias("df"),
-        # cf is diagnostic-only (never in scoring); first-chunk value —
-        # exact on fresh/compacted indexes, stale across delta segments
-        F.first("cf").alias("cf"),
-        F.first("num_chunks").alias("num_chunks"),
         F.max("chunk_max_weight").alias("max_term_weight"),
         F.sum("n").alias("postings"),
         F.sum(F.length("payload")).alias("payload_bytes"),
@@ -732,7 +730,7 @@ def term_stats_agg(index_df: DataFrame) -> DataFrame:
 def apply_bound_scales(index_df: DataFrame, scales: dict[int, float]) -> DataFrame:
     """Inflate a partitioned index's frozen max-weight bounds by the
     per-part admissibility factors (checkpoint.part_bound_scales):
-    after an incremental update grew avg_doc_len, stale parts' bounds
+    after a delta update grew avg_doc_len, stale parts' bounds
     stay valid upper bounds when multiplied by avg_new/avg_at_encode.
     Payloads and scores are untouched — only pruning metadata."""
     pairs = [x for kv in scales.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
@@ -751,8 +749,9 @@ def apply_bound_scales(index_df: DataFrame, scales: dict[int, float]) -> DataFra
 def load_index(spark: SparkSession, out_dir: str):
     """(index_df, doc_stats_df, term_stats_df, IndexCodec, manifest).
 
-    For a resumable/incremental layout, stale per-part max-weight
-    bounds are inflated admissibly at load (apply_bound_scales)."""
+    For a resumable layout grown by delta updates, the max-weight
+    bounds of parts encoded under a smaller avg_doc_len are inflated
+    admissibly at load (apply_bound_scales)."""
     with open(f"{out_dir}/models.pkl", "rb") as fh:
         side = pickle.load(fh)
     with open(f"{out_dir}/manifest.json") as fh:

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from partitioned_ef_ans_spark.index import build as b_mod
 from partitioned_ef_ans_spark.operators import doc_stats as ds_mod
 from partitioned_ef_ans_spark.operators import postings as p_mod
-from partitioned_ef_ans_spark.tokenizer import term_frequencies, tokenize
+from partitioned_ef_ans_spark.tokenizer import term_frequencies
 
 
 class BuildInterrupted(RuntimeError):
@@ -181,7 +181,7 @@ def build_index_resumable(
             "elapsed_sec": round(time.perf_counter() - t_part, 3),
             "codec": codec,
             # the avg doc length the frozen max-weight bounds were
-            # computed under — incremental updates use it to inflate
+            # computed under — delta updates use it to inflate
             # stale bounds admissibly (part_bound_scales)
             "avg_len_at_encode": avg_len,
         }
@@ -221,7 +221,7 @@ def build_index_resumable(
     return metrics
 
 
-# ----------------------------------------------------- incremental updates
+# ----------------------------------------------------------- delta updates
 
 def part_bound_scales(out_dir: str, avg_len_now: float) -> dict[int, float]:
     """part_id -> admissible inflation for that part's frozen
@@ -827,7 +827,7 @@ def _refresh_sidecars(
 # surviving docs' scores are unchanged by deletion.  compact_index
 # folds tombstones physically (postings dropped, stats/models/universe
 # recomputed) and resets the sidecar.  Updates never clear tombstones:
-# the incremental/delta contract requires FRESH (monotone) doc ids, so
+# the delta-update contract requires FRESH (monotone) doc ids, so
 # a deleted id can never be legitimately re-added — re-ingesting a
 # document is insert-under-new-id + delete-old-id, the LSM pattern.
 
@@ -990,8 +990,9 @@ def _merge_indexes_locked(
                     f"{snap}/staging_postings.parquet"
                 )
                 # (term, doc_id) is unique across a source's staging by
-                # construction — in-place updates REPLACE term lists,
-                # delta segments carry only fresh monotone ids — so no
+                # construction — builds and compactions write one list
+                # per term, delta segments carry only fresh monotone
+                # ids — so no
                 # dedup shuffle is needed here (the decode-equality
                 # tests against a fresh build would catch a violation)
                 tf_s = staged_s.select(
@@ -1423,282 +1424,6 @@ def release_snapshot(snap_dir: str) -> None:
 
 
 @_locked
-def update_index_incremental(
-    spark: SparkSession,
-    out_dir: str,
-    new_docs: DataFrame,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
-    skip_stale: bool = False,
-) -> dict:
-    """Fold new documents into a resumable-layout index, re-encoding
-    ONLY the vocabulary slice the new docs touch.
-
-    Contract and scale design:
-
-    - New doc_ids must be fresh (> every existing doc_id) so posting
-      lists stay sorted and doc-range chunking stays valid.
-    - Affected TERMS' full lists are rebuilt from the staging table
-      (chunk boundaries depend on df and num_docs) and re-encoded;
-      untouched terms' payload bytes are untouched on disk.
-    - Scores remain EXACT for every doc: they are computed at query
-      time from decoded tf + in-chunk doc_lens + the manifest's new
-      avg_doc_len.  Only the frozen max-weight PRUNING bounds of
-      untouched parts go stale when avg_len grows; load_index inflates
-      them by avg_new/avg_at_encode per part (see part_bound_scales —
-      provably admissible), so top-k stays exact with slightly weaker
-      pruning until the next full build.
-    - ANS-family codecs keep the build-frozen models; merged lists may
-      contain (model, symbol) pairs the frozen frames cannot encode
-      (the reference never faces this — it trains on the frozen
-      collection, create_freq_index.cpp:266-275).  ans_msb.models_cover
-      pre-checks the affected lists; on drift the update retrains and
-      re-encodes ALL parts (flagged ``model_drift_full_reencode``).
-      ans_packed is conservatively always retrained.
-    - Whole-list EF families (pef/ef/single/uniform) lay payloads out
-      against the global universe (num_docs), so ANY corpus growth
-      re-encodes every part (flagged ``universe_drift_full_reencode``)
-      — true incrementality is a block/ANS-family property.
-    """
-    import pickle
-    import shutil
-
-    from partitioned_ef_ans_spark.codecs import ans_msb
-    from partitioned_ef_ans_spark.session import ship_package
-
-    ship_package(spark)
-    t0 = time.perf_counter()
-    staging = f"{out_dir}/staging_postings.parquet"
-    stats_path = f"{out_dir}/doc_stats.parquet"
-    _recover_commit(out_dir)
-    _recover_swaps([staging, f"{out_dir}/index.parquet", out_dir])
-    with open(f"{out_dir}/manifest.json") as fh:
-        man = json.load(fh)
-    num_parts = int(man["num_parts"])
-    # disk truth, not just the manifest counter: a delta update that
-    # crashed between its part swap and its manifest refresh leaves
-    # delta part dirs with delta_segments still at the old value —
-    # running the in-place path over them would merge blind to their
-    # rows
-    if int(man.get("delta_segments", 0)) or _live_delta_pids(out_dir, num_parts):
-        raise ValueError(
-            "index has live delta segments (update_index_delta): the "
-            "in-place incremental update's per-part keep/merge cannot "
-            "see delta rows — run compact_index first"
-        )
-    chunk_postings = int(man["chunk_postings"])
-    old_avg = float(man["avg_doc_len"])
-    with open(f"{out_dir}/models.pkl", "rb") as fh:
-        side = pickle.load(fh)
-    codec = side["codec"]
-
-    # ---- 1. new tf + appended doc stats; fresh global scalars
-    old_max = spark.read.parquet(stats_path).agg(F.max("doc_id")).collect()[0][0]
-    if skip_stale and old_max is not None:
-        # at-least-once sources (foreachBatch replay) may redeliver
-        # docs already folded in — idempotence by id-freshness filter
-        new_docs = new_docs.where(F.col(doc_col) > old_max)
-    new_min = new_docs.agg(F.min(F.col(doc_col))).collect()[0][0]
-    if new_min is None:
-        srow = spark.read.parquet(stats_path).agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avg"),
-            F.max("doc_id").alias("mx"),
-        ).collect()[0]
-        if int(srow["n"]) != int(man["num_docs"]):
-            # a prior update crashed between the final stats append
-            # and the sidecar refresh — finalize it now
-            uni = max(
-                int(man.get("universe", man["num_docs"])),
-                int(srow["mx"]) + 1 if srow["mx"] is not None else 0,
-            )
-            return _refresh_sidecars(
-                spark, out_dir, man, int(srow["n"]), float(srow["avg"]),
-                {"recovered_finalize": True, "universe": uni},
-            )
-        return {**man, "update_sec": 0.0, "parts_reencoded": 0}
-    if old_max is not None and new_min <= old_max:
-        raise ValueError(
-            f"incremental update needs fresh doc_ids (> {old_max}), got min {new_min}"
-        )
-    from partitioned_ef_ans_spark.tokenizer import tokenize_ngram
-
-    tf_new = term_frequencies(
-        tokenize_ngram(new_docs, doc_col=doc_col, text_col=text_col,
-                       ngram=int(man.get("ngram", 1)))
-    ).select("doc_id", "term", "tf")
-    # CRASH SAFETY: doc_stats.parquet is appended LAST (step 8) — it
-    # feeds old_max, so a doc enters the replay filter only after its
-    # postings are fully folded in.  Until then the new stats ride as
-    # an in-plan union view.
-    stats_new = ds_mod.build_doc_stats(
-        new_docs.select(F.col(doc_col).alias("doc_id")), tf_new
-    )
-    stats_scratch = f"{out_dir}/.update_stats.parquet"
-    stats_new.write.mode("overwrite").parquet(stats_scratch)
-    stats_new = spark.read.parquet(stats_scratch)
-    stats_df = spark.read.parquet(stats_path).unionByName(stats_new)
-    srow = stats_df.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avg"),
-        F.max("doc_id").alias("mx"),
-    ).collect()[0]
-    num_docs, avg_len = int(srow["n"]), float(srow["avg"] or 0.0)
-    # docID universe for EF layout + chunk stride: max_id+1, never
-    # shrinking below what earlier payloads were encoded under
-    universe = max(
-        int(man.get("universe", man["num_docs"])), int(srow["mx"]) + 1
-    )
-
-    # ---- 2. affected terms -> parts
-    part_col = (F.crc32(F.col("term")) % num_parts).cast("int")
-    aff_terms = tf_new.select("term").distinct().cache()
-    aff_parts = sorted(
-        r["p"] for r in aff_terms.select(part_col.alias("p")).distinct().collect()
-    )
-    staged = spark.read.parquet(staging)
-
-    # ---- 3. affected terms' full lists: reconstruct + union + rechunk
-    old_sub = staged.where(F.col("part_id").isin(aff_parts)).join(
-        F.broadcast(aff_terms), "term", "left_semi"
-    )
-    tf_old = old_sub.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "freqs")).alias("z")
-    ).select(
-        "term",
-        F.col("z.doc_ids").alias("doc_id"),
-        F.col("z.freqs").cast("int").alias("tf"),
-    )
-    # dropDuplicates makes a REPLAY of a partially-applied update
-    # exact: if a crash left some parts already merged, the
-    # reconstructed lists contain the new docs too — the (term,
-    # doc_id) pair carries the same tf on both sides, so dedup
-    # converges to the same merged lists on any retry.
-    tf_union = tf_old.unionByName(
-        tf_new.select("term", "doc_id", F.col("tf").cast("int").alias("tf"))
-    ).dropDuplicates(["term", "doc_id"])
-    new_chunks = p_mod.build_postings(
-        tf_union, num_docs=universe, chunk_postings=chunk_postings,
-        doc_norms=stats_df,
-    ).withColumn("part_id", part_col)
-    # materialize BEFORE any staging swap: the lazy plan reads every
-    # affected part's OLD files, which the swap loop replaces
-    scratch = f"{out_dir}/.update_chunks.parquet"
-    new_chunks.write.mode("overwrite").parquet(scratch)
-    new_chunks = spark.read.parquet(scratch)
-
-    # ---- 4. swap affected staging parts (keep untouched terms' rows)
-    for pid in aff_parts:
-        keep = (
-            staged.where(F.col("part_id") == pid)
-            .join(F.broadcast(aff_terms), "term", "left_anti")
-            .drop("part_id")
-        )
-        merged = keep.unionByName(
-            new_chunks.where(F.col("part_id") == pid).drop("part_id")
-        )
-        _swap_dir_write(merged, f"{staging}/part_id={pid}")
-    staged = spark.read.parquet(staging)
-
-    # ---- 5. model/universe coverage -> encode scope
-    full_reencode = False
-    universe_drift = False
-    models = side["models"]
-    if codec in ("pef", "ef", "single", "uniform"):
-        # whole-list EF payloads are laid out against the GLOBAL
-        # universe (num_docs, freq_index.hpp/compact_elias_fano.hpp:
-        # the collection header's universe) — growing the corpus
-        # changes every list's bit layout, so the EF families must
-        # re-encode all parts.  Block/ANS families encode d-gaps with
-        # no universe dependence and keep true incrementality.
-        full_reencode = universe_drift = True
-    elif codec in b_mod.ANS_CODEC_VARIANTS:
-        variant = b_mod.ANS_CODEC_VARIANTS[codec]
-        aff_lists = staged.where(F.col("part_id").isin(aff_parts)).join(
-            F.broadcast(aff_terms), "term", "left_semi"
-        )
-        cd, cf = b_mod.ans_counts(aff_lists, variant)
-        (enc_d, _), (enc_f, _) = models
-        if not (ans_msb.models_cover(enc_d, cd) and ans_msb.models_cover(enc_f, cf)):
-            full_reencode = True
-            models = b_mod.train_ans_models(staged, variant=variant)
-    elif codec == "ans_packed":
-        full_reencode = True
-        models = b_mod.train_ans_packed_models(staged)
-    # NOTE: when retraining, models.pkl is rewritten only AFTER every
-    # part is re-encoded (below) — writing it first would leave a
-    # crashed run's not-yet-re-encoded parts undecodable, and the
-    # replay's coverage check would then wrongly pass against the new
-    # models.  A crash mid-re-encode replays with the OLD pkl, detects
-    # drift again, deterministically retrains the same models, and
-    # overwrites every part again.
-
-    codec_bundle = b_mod.IndexCodec(codec, models, num_docs=universe)
-    codec_bc = spark.sparkContext.broadcast(codec_bundle)
-    encode_parts = list(range(num_parts)) if full_reencode else aff_parts
-
-    # ---- 6. re-encode + swap index parts; refresh checkpoint records
-    done = _read_ckpt(out_dir)
-    for pid in encode_parts:
-        t_part = time.perf_counter()
-        idx_dir = f"{out_dir}/index.parquet/part={pid}"
-        enc_src = staged.where(F.col("part_id") == pid).drop("part_id")
-        if not full_reencode:
-            enc_src = enc_src.join(F.broadcast(aff_terms), "term", "left_semi")
-        enc_new = enc_src.mapInPandas(
-            b_mod._encode_factory(codec_bc, avg_len), schema=b_mod.INDEX_SCHEMA
-        )
-        if full_reencode:
-            merged_idx = enc_new
-        else:
-            keep_idx = spark.read.parquet(idx_dir).join(
-                F.broadcast(aff_terms), "term", "left_anti"
-            )
-            merged_idx = keep_idx.unionByName(enc_new)
-        _swap_dir_write(merged_idx, idx_dir)
-        stats_row = spark.read.parquet(idx_dir).agg(
-            F.sum("n").alias("postings"), F.sum(F.length("payload")).alias("bytes")
-        ).collect()[0]
-        done[pid] = {
-            "part_id": pid,
-            "lineage": _lineage(spark, staged, pid),
-            "postings": int(stats_row["postings"] or 0),
-            "payload_bytes": int(stats_row["bytes"] or 0),
-            "elapsed_sec": round(time.perf_counter() - t_part, 3),
-            "codec": codec,
-            "avg_len_at_encode": avg_len,
-        }
-    if full_reencode:
-        with open(f"{out_dir}/models.pkl", "wb") as fh:
-            pickle.dump({"codec": codec, "models": models}, fh)
-    for pid, rec in done.items():
-        # pre-update records: bounds were encoded under the OLD avg
-        rec.setdefault("avg_len_at_encode", old_avg)
-    _write_ckpt(f"{out_dir}/checkpoints.jsonl", done)
-
-    # ---- 7. doc stats become visible LAST: a doc enters the replay
-    # filter (old_max) only once its postings are fully folded in, so
-    # a crash anywhere above replays exactly (tf dedup + part swaps
-    # are idempotent), and a crash after this append is healed by the
-    # finalize-recovery path on the next call.
-    stats_new.write.mode("append").parquet(stats_path)
-
-    man = _refresh_sidecars(
-        spark, out_dir, man, num_docs, avg_len,
-        dict(
-            universe=universe,
-            incremental_updates=int(man.get("incremental_updates", 0)) + 1,
-            model_drift_full_reencode=full_reencode and not universe_drift,
-            universe_drift_full_reencode=universe_drift,
-            update_sec=round(time.perf_counter() - t0, 3),
-            parts_reencoded=len(encode_parts),
-        ),
-    )
-    aff_terms.unpersist()
-    shutil.rmtree(scratch, ignore_errors=True)
-    shutil.rmtree(stats_scratch, ignore_errors=True)
-    return man
-
-
-@_locked
 def update_index_delta(
     spark: SparkSession,
     out_dir: str,
@@ -1722,14 +1447,13 @@ def update_index_delta(
     O(live deltas) per fold (base parts are never re-read).  None
     (default) keeps the policy manual.
 
-    Why this exists: `update_index_incremental` rebuilds every touched
-    term's FULL list.  On any Zipfian corpus a batch of new docs
-    touches the head vocabulary — i.e. the longest lists — so the
-    in-place update costs nearly a rebuild no matter how small the
-    batch (measured: a 100-doc update ≈ a full rebuild at 35M
-    postings, BENCH.md).  The Lucene/LSM answer: new docs become a
+    This is the one update entry point.  Rebuilding every touched
+    term's FULL list instead would cost nearly a rebuild per batch: on
+    any Zipfian corpus a batch of new docs touches the head vocabulary
+    — the longest lists.  The Lucene/LSM answer: new docs become a
     small self-contained segment; queries read base + deltas; deltas
-    fold back at compaction.
+    fold back at compaction (`compact_deltas`, or `compact_index` for
+    the single-segment layout).
 
     Mechanics in this layout:
     - One pass over the batch: it is tokenized once into cached
@@ -1745,8 +1469,8 @@ def update_index_delta(
       query paths take df from the term-level term_stats aggregation
       (sum of chunk sizes — query_lists_df), which the sidecar refresh
       recomputes over base+delta; per-chunk pruning bounds are
-      segment-local and stay admissible as encoded (stale-avg_len
-      inflation applies per part exactly like incremental updates).
+      segment-local; a part encoded under an older, smaller avg_len
+      has its bounds inflated at load (`part_bound_scales`).
     - ANS-family codecs train PER-SEGMENT models on the staged delta
       chunks (short delta lists select block-stat buckets the base
       models never saw, so frozen-model coverage would fail for almost
@@ -1762,16 +1486,12 @@ def update_index_delta(
     - Crash safety: a plain update's writes are deterministic directory
       swaps keyed by the segment number (which only advances in the
       manifest at the very end), doc stats append LAST, so a replay of
-      the same batch overwrites the same directories — idempotent like
-      the in-place path; the stats-mismatch finalize recovery is
-      shared.  A folding update builds its whole new state in scratch
-      paths and commits once through `_commit_renames`: a crash
-      before the journal leaves the old state (batch absent) fully
-      live, a crash after it rolls forward.
-    - `update_index_incremental` REFUSES while deltas exist (its
-      per-part keep/merge logic cannot see delta rows); run
-      `compact_index` first — it folds deltas back into the hash
-      parts, re-chunks the affected terms, and re-encodes everything.
+      the same batch overwrites the same directories — idempotent; a
+      crash between the stats append and the manifest refresh is
+      finalized by the next call.  A folding update builds its whole
+      new state in scratch paths and commits once through
+      `_commit_renames`: a crash before the journal leaves the old
+      state (batch absent) fully live, a crash after it rolls forward.
     """
     import pickle
 
@@ -1834,7 +1554,7 @@ def update_index_delta(
         )
     delta_pid = num_parts + seg - 1
 
-    # ---- freshness / replay filtering (same discipline as in-place)
+    # ---- freshness / replay filtering (at-least-once sources)
     if skip_stale and old_max is not None:
         new_docs = new_docs.where(F.col(doc_col) > old_max)
     # ---- tokenize ONCE (same token rule the index was built with —
@@ -1860,9 +1580,8 @@ def update_index_delta(
                     {
                         "recovered_finalize": True,
                         "universe": uni,
-                        # re-arm the counter the crashed finalize never
-                        # wrote (also re-arms update_index_incremental's
-                        # live-delta refusal)
+                        # re-arm the counter the crashed finalize
+                        # never wrote
                         "delta_segments": committed,
                     },
                 )
@@ -2223,10 +1942,12 @@ def compact_deltas(spark: SparkSession, out_dir: str) -> dict:
 @_locked
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
     """Full re-encode of a resumable-layout index from its staging
-    table with freshly retrained models — the maintenance endgame
-    after a chain of incremental updates: frozen ANS models drift from
-    the grown corpus (compression degrades) and stale-bound inflation
-    weakens pruning.  Compaction retrains, re-encodes every part under
+    table with freshly retrained models — the MAJOR compaction after a
+    chain of delta updates: every delta segment folds back into the
+    hash parts (the single-segment layout of a fresh build), the
+    per-segment models and universes give way to one retrained set,
+    and the stale-bound inflation of base parts encoded under an older
+    avg_len goes away.  Compaction retrains, re-encodes every part under
     the CURRENT avg_doc_len, and resets every part's
     ``avg_len_at_encode`` — after it, `part_bound_scales` is empty and
     bits/posting returns to build-fresh.
@@ -2277,9 +1998,8 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             f"staging contains doc_id {staged_mx} beyond the stats "
             f"universe {guard_universe} — an interrupted update left "
             "postings without their doc stats; replay the interrupted "
-            "batch first (update_index_incremental, or "
-            "update_index_delta for a crashed delta segment — replays "
-            "are exact) before compacting"
+            "batch first (update_index_delta — replays are exact) "
+            "before compacting"
         )
 
     # ---- tombstones fold in physically: every structure below is

@@ -41,7 +41,7 @@ def build_phrase_index(spark: SparkSession, corpus_docs: DataFrame,
                        **kw) -> dict:
     """The ordinary index build over n-gram shingle terms.  The token
     rule rides in the manifest (``ngram``), so the maintenance planes
-    (incremental update, LSM deltas, compaction, merge) keep shingling
+    (LSM delta updates, compaction, merge) keep shingling
     new docs exactly like the build did."""
     return b_mod.build_index(
         spark, corpus_docs, out_dir, codec=codec,

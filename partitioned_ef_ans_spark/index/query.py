@@ -1016,7 +1016,7 @@ def make_ranked_kernel(
             )
         # DAAT exhaustion sentinel: must exceed every REAL docID.  The
         # corpus COUNT is only that on dense-id indexes — sparse ids
-        # (incremental updates, shard/merged docID ranges) have
+        # (delta updates, shard/merged docID ranges) have
         # max_id+1 == the codec's encode universe, which can itself be
         # outgrown by delta-segment universes.  Using the count here
         # made the faithful walks terminate before any doc with
@@ -1233,10 +1233,7 @@ def codec_broadcast(spark, codec):
     if memo is not None and memo[0] is sc:
         return memo[1]
     bc = sc.broadcast(codec)
-    try:
-        codec._pefa_bc = (sc, bc)
-    except Exception:
-        pass
+    codec._pefa_bc = (sc, bc)
     return bc
 
 

@@ -1,14 +1,14 @@
 """Streaming corpus -> live index: micro-batches fold into an
-existing index via incremental maintenance.
+existing index as delta segments.
 
 The end-to-end Spark-native shape the reference's batch-only pipeline
 cannot express: documents land in a directory, each micro-batch calls
-`index/checkpoint.py::update_index_incremental` (re-encoding only the
-touched vocabulary slice, admissible stale-bound inflation), and the
-index directory stays queryable between batches.  Exactly-once effect
-on the index: the file source checkpoint makes delivery at-least-once,
-and the update's `skip_stale` id-freshness filter makes replays
-no-ops (doc_ids are monotone by contract).
+`index/checkpoint.py::update_index_delta` (one O(batch) delta segment
+with its own models), and the index directory stays queryable between
+batches.  Exactly-once effect on the index: the file source checkpoint
+makes delivery at-least-once, and the update's `skip_stale`
+id-freshness filter makes replays no-ops (doc_ids are monotone by
+contract).
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ def start_index_update_stream(
     index_dir: str,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    mode: str = "incremental",
     max_segments: int | None = None,
 ):
     """File-source stream of (doc_id, content) documents; each
@@ -32,28 +31,18 @@ def start_index_update_stream(
     exist — build it with ``build_index_resumable`` first, possibly on
     an empty-ish seed corpus).
 
-    ``mode="incremental"``: in-place touched-vocabulary re-encode
-    (O(touched postings) — near a rebuild per batch on Zipf text).
-    ``mode="delta"``: each micro-batch becomes an LSM delta segment
-    with its own models (O(batch) — the right shape for streams);
-    ``max_segments`` bounds the stack via the in-line tiered-merge
-    policy (minor compaction, O(live deltas)), otherwise run
+    Each micro-batch becomes an LSM delta segment.  ``max_segments``
+    bounds the stack via the in-line tiered-merge policy (minor
+    compaction, O(live deltas)); otherwise run
     ``compact_index``/``compact_deltas`` periodically yourself."""
-    from partitioned_ef_ans_spark.index.checkpoint import (
-        update_index_delta,
-        update_index_incremental,
-    )
+    from partitioned_ef_ans_spark.index.checkpoint import update_index_delta
 
-    if mode not in ("incremental", "delta"):
-        raise ValueError(f"unknown index update mode {mode!r}")
-    update = update_index_incremental if mode == "incremental" else update_index_delta
-    kw = {"max_segments": max_segments} if mode == "delta" else {}
     src = spark.readStream.schema(CORPUS_STREAM_SCHEMA).parquet(input_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        update(
-            spark, index_dir, batch_df,
-            doc_col="doc_id", text_col="content", skip_stale=True, **kw,
+        update_index_delta(
+            spark, index_dir, batch_df, doc_col="doc_id",
+            text_col="content", skip_stale=True, max_segments=max_segments,
         )
 
     writer = src.writeStream.foreachBatch(sink).option(

@@ -118,7 +118,7 @@ def tokenize_ngram(corpus: DataFrame, doc_col: str = "doc_id",
     """Dispatch on the index's token rule: ``ngram=1`` is ordinary
     tokenization, ``ngram>=2`` the shingle stream.  The value is
     recorded in the index manifest so every maintenance path
-    (incremental update, LSM delta, streamed folds) keeps tokenizing
+    (LSM delta updates, streamed folds, merges) keeps tokenizing
     the way the index was built."""
     if ngram <= 1:
         return tokenize(corpus, doc_col=doc_col, text_col=text_col)

@@ -1,6 +1,7 @@
-"""Incremental index maintenance: fold new docs into an existing
-index re-encoding only the touched vocabulary slice, with admissible
-inflation of stale pruning bounds (checkpoint.update_index_incremental)."""
+"""Index maintenance: new docs fold into an existing index as LSM delta
+segments (checkpoint.update_index_delta, the one update entry point),
+with admissible inflation of stale pruning bounds, minor and major
+compaction, crash-safe commits and the writer lease."""
 
 from __future__ import annotations
 
@@ -102,10 +103,17 @@ def _decode_flat_rows(spark, out_dir):
 
 @pytest.mark.parametrize("codec", ["ans", "u32"])
 def test_incremental_update_matches_full_rebuild(spark, tmp_path, codec):
+    """A delta batch of much longer docs grows avg_doc_len, so the base
+    parts' frozen max-weight bounds go stale: load_index inflates them
+    (part_bound_scales > 1), every retrieval mode — including queries
+    that touch only base parts — stays rank-identical to a full
+    rebuild, and re-deriving term_stats from the loaded index gives
+    the committed term_stats.parquet row for row."""
+    from partitioned_ef_ans_spark.index import build as b_mod
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
         part_bound_scales,
-        update_index_incremental,
+        update_index_delta,
     )
     from partitioned_ef_ans_spark.tokenizer import term_frequencies, tokenize
 
@@ -118,7 +126,8 @@ def test_incremental_update_matches_full_rebuild(spark, tmp_path, codec):
         spark, _mk_docs(spark, rows_a), inc_dir, codec=codec,
         num_parts=NUM_PARTS, chunk_postings=CHUNK,
     )
-    man = update_index_incremental(spark, inc_dir, _mk_docs(spark, rows_b))
+    man = update_index_delta(spark, inc_dir, _mk_docs(spark, rows_b))
+    assert man["delta_segments"] == 1
 
     build_index_resumable(
         spark, _mk_docs(spark, rows_a + rows_b), full_dir, codec=codec,
@@ -135,25 +144,16 @@ def test_incremental_update_matches_full_rebuild(spark, tmp_path, codec):
     }
     assert _decode_flat_rows(spark, inc_dir) == truth
 
-    # 2. incrementality was real (unless ANS model drift forced a full
-    # re-encode, which the manifest must then declare)
-    assert not man.get("universe_drift_full_reencode")
-    if not man.get("model_drift_full_reencode"):
-        assert man["parts_reencoded"] < NUM_PARTS
-        touched = {p for p in range(NUM_PARTS) if any(
-            _part(t) == p
-            for t in " ".join(t for _, t in rows_b).split()
-        )}
-        assert man["parts_reencoded"] == len(touched)
-        # untouched parts carry stale bounds -> inflation factors > 1
-        scales = part_bound_scales(inc_dir, man["avg_doc_len"])
-        assert set(scales) == set(range(NUM_PARTS)) - touched
-        assert all(s > 1.0 for s in scales.values())
+    # 2. the base parts were encoded under the old, smaller avg_len:
+    # their bounds are inflated; the delta part's are current
+    scales = part_bound_scales(inc_dir, man["avg_doc_len"])
+    assert set(scales) == set(range(NUM_PARTS))
+    assert all(s > 1.0 for s in scales.values())
 
     # 3. every retrieval mode is rank-identical to the full rebuild
     qs = [
-        (0, [by_part[0][0], by_part[2][0]]),   # touched + untouched
-        (1, [by_part[2][1], by_part[3][1]]),   # untouched only (stale bounds)
+        (0, [by_part[0][0], by_part[2][0]]),   # base + delta chunks
+        (1, [by_part[2][1], by_part[3][1]]),   # base parts only (stale bounds)
         (2, [by_part[0][1]]),
         (3, [by_part[1][0], by_part[1][2], by_part[3][0]]),
     ]
@@ -164,96 +164,23 @@ def test_incremental_update_matches_full_rebuild(spark, tmp_path, codec):
     # doc-partitioned pruned execution also honors the inflated bounds
     assert _docpart(spark, inc_dir, qs) == _docpart(spark, full_dir, qs)
 
-    # 4. a second update on top of the first also stays correct
-    rows_c = [(200, rows_b[0][1]), (201, "zz_new_term " * 20)]
-    update_index_incremental(spark, inc_dir, _mk_docs(spark, rows_c))
-    truth_c = {
-        (r["term"], r["doc_id"], r["tf"])
-        for r in term_frequencies(
-            tokenize(_mk_docs(spark, rows_a + rows_b + rows_c),
-                     doc_col="doc_id", text_col="text")
-        ).collect()
-    }
-    assert _decode_flat_rows(spark, inc_dir) == truth_c
-
-
-def test_incremental_ef_universe_fallback(spark, tmp_path):
-    """EF-family payloads are laid out against the global universe
-    (num_docs), so an update must re-encode every part — flagged, and
-    still exact."""
-    from partitioned_ef_ans_spark.index.checkpoint import (
-        build_index_resumable,
-        update_index_incremental,
+    # 4. term_stats is a function of the index alone (create_wand_data
+    # re-derives it this way)
+    rederived = b_mod.term_stats_agg(b_mod.load_index(spark, inc_dir)[0])
+    committed = spark.read.parquet(f"{inc_dir}/term_stats.parquet")
+    assert sorted(tuple(r) for r in rederived.collect()) == sorted(
+        tuple(r) for r in committed.collect()
     )
-
-    by_part = _vocab_by_part()
-    rows_a, rows_b = _corpus_a(by_part), _corpus_b(by_part)
-    inc_dir, full_dir = str(tmp_path / "inc"), str(tmp_path / "full")
-    build_index_resumable(
-        spark, _mk_docs(spark, rows_a), inc_dir, codec="pef",
-        num_parts=NUM_PARTS, chunk_postings=CHUNK,
-    )
-    man = update_index_incremental(spark, inc_dir, _mk_docs(spark, rows_b))
-    assert man["universe_drift_full_reencode"]
-    assert man["parts_reencoded"] == NUM_PARTS
-    build_index_resumable(
-        spark, _mk_docs(spark, rows_a + rows_b), full_dir, codec="pef",
-        num_parts=NUM_PARTS, chunk_postings=CHUNK,
-    )
-    qs = [(0, [by_part[0][0], by_part[2][0]]), (1, [by_part[3][1]])]
-    assert _ranked(spark, inc_dir, qs, "taat") == _ranked(
-        spark, full_dir, qs, "taat"
-    )
-
-
-def test_streaming_docs_fold_into_live_index(spark, tmp_path):
-    """Two waves of streamed documents fold into the index via
-    incremental updates; final retrieval is rank-identical to a batch
-    rebuild over everything.  The second start replays nothing (file
-    source checkpoint) and stale ids are filtered, so the result is
-    exactly-once in effect."""
-    from partitioned_ef_ans_spark.index.checkpoint import build_index_resumable
-    from partitioned_ef_ans_spark.streaming.index_update import (
-        start_index_update_stream,
-    )
-
-    by_part = _vocab_by_part()
-    rows_a = _corpus_a(by_part)
-    rows_b = _corpus_b(by_part)
-    rows_c = [(300, " ".join(by_part[2][:4] * 6))]
-    inp = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    inc_dir, full_dir = str(tmp_path / "inc"), str(tmp_path / "full")
-
-    build_index_resumable(
-        spark, _mk_docs(spark, rows_a), inc_dir, codec="ans",
-        num_parts=NUM_PARTS, chunk_postings=CHUNK,
-    )
-    for wave in (rows_b, rows_c):
-        spark.createDataFrame(
-            [(d, t) for d, t in wave], "doc_id long, content string"
-        ).write.mode("append").parquet(inp)
-        start_index_update_stream(spark, inp, inc_dir, ckpt)
-
-    build_index_resumable(
-        spark, _mk_docs(spark, rows_a + rows_b + rows_c), full_dir,
-        codec="ans", num_parts=NUM_PARTS, chunk_postings=CHUNK,
-    )
-    qs = [(0, [by_part[2][0], by_part[0][0]]), (1, [by_part[2][2]])]
-    for mode in ("blockmax", "taat"):
-        assert _ranked(spark, inc_dir, qs, mode) == _ranked(
-            spark, full_dir, qs, mode
-        )
 
 
 def test_replay_same_batch_is_noop(spark, tmp_path):
-    """At-least-once delivery: replaying an already-applied batch with
-    skip_stale must change nothing (doc stats enter the replay filter
-    only after the index is fully updated, so this also guards the
-    append-last crash-safety ordering)."""
+    """At-least-once delivery: replaying an already-applied delta batch
+    with skip_stale must change nothing (doc stats enter the replay
+    filter only after the segment is fully written, so this also
+    guards the append-last crash-safety ordering)."""
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
-        update_index_incremental,
+        update_index_delta,
     )
 
     by_part = _vocab_by_part()
@@ -262,11 +189,13 @@ def test_replay_same_batch_is_noop(spark, tmp_path):
         spark, _mk_docs(spark, _corpus_a(by_part)), d, codec="ans",
         num_parts=NUM_PARTS, chunk_postings=CHUNK,
     )
-    batch = _mk_docs(spark, _corpus_b(by_part))
-    update_index_incremental(spark, d, batch, skip_stale=True)
+    batch = _mk_docs(spark, _corpus_delta(by_part))
+    man1 = update_index_delta(spark, d, batch, skip_stale=True)
+    assert man1["delta_segments"] == 1
     before = _decode_flat_rows(spark, d)
-    man2 = update_index_incremental(spark, d, batch, skip_stale=True)
-    assert man2["parts_reencoded"] == 0
+    man2 = update_index_delta(spark, d, batch, skip_stale=True)
+    assert man2["update_sec"] == 0.0
+    assert man2["delta_segments"] == 1
     assert _decode_flat_rows(spark, d) == before
 
 
@@ -295,7 +224,8 @@ def test_recover_swaps_restores_interrupted_rename(tmp_path):
 
 
 def test_compaction_resets_inflation_and_stays_exact(spark, tmp_path):
-    """After drifty incremental updates, compact_index retrains +
+    """After a drifty delta update (much longer docs grow avg_doc_len,
+    so the base parts' bounds go stale), compact_index retrains +
     re-encodes everything under the current stats: the per-part bound
     inflation disappears, and retrieval stays rank-identical to a
     from-scratch rebuild."""
@@ -303,7 +233,7 @@ def test_compaction_resets_inflation_and_stays_exact(spark, tmp_path):
         build_index_resumable,
         compact_index,
         part_bound_scales,
-        update_index_incremental,
+        update_index_delta,
     )
 
     by_part = _vocab_by_part()
@@ -313,9 +243,8 @@ def test_compaction_resets_inflation_and_stays_exact(spark, tmp_path):
         spark, _mk_docs(spark, rows_a), inc_dir, codec="ans",
         num_parts=NUM_PARTS, chunk_postings=CHUNK,
     )
-    man = update_index_incremental(spark, inc_dir, _mk_docs(spark, rows_b))
-    if not man.get("model_drift_full_reencode"):
-        assert part_bound_scales(inc_dir, man["avg_doc_len"])
+    man = update_index_delta(spark, inc_dir, _mk_docs(spark, rows_b))
+    assert part_bound_scales(inc_dir, man["avg_doc_len"])
 
     man2 = compact_index(spark, inc_dir)
     assert man2["compactions"] == 1
@@ -340,12 +269,12 @@ def test_sparse_doc_ids_update_uses_true_universe(spark, tmp_path, codec):
     """The update contract only requires fresh (not dense) doc_ids:
     EF-family payloads laid out against the doc COUNT instead of
     max_id+1 silently corrupt once ids are sparse.  Both the EF
-    full-re-encode path and the block-family incremental path must
+    per-segment-universe path and the ANS per-segment-model path must
     stay lossless and rank-identical to a full rebuild on the same
     sparse ids."""
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
-        update_index_incremental,
+        update_index_delta,
     )
 
     by_part = _vocab_by_part()
@@ -357,7 +286,7 @@ def test_sparse_doc_ids_update_uses_true_universe(spark, tmp_path, codec):
         spark, _mk_docs(spark, rows_a), inc_dir, codec=codec,
         num_parts=NUM_PARTS, chunk_postings=CHUNK,
     )
-    man = update_index_incremental(spark, inc_dir, _mk_docs(spark, rows_b))
+    man = update_index_delta(spark, inc_dir, _mk_docs(spark, rows_b))
     assert man["universe"] == 5001 and man["num_docs"] == 42
 
     from partitioned_ef_ans_spark.tokenizer import term_frequencies, tokenize
@@ -388,7 +317,7 @@ def test_update_lock_blocks_concurrent_writers(spark, tmp_path):
     from partitioned_ef_ans_spark.index.checkpoint import (
         UpdateInProgress,
         build_index_resumable,
-        update_index_incremental,
+        update_index_delta,
     )
 
     by_part = _vocab_by_part()
@@ -408,12 +337,12 @@ def test_update_lock_blocks_concurrent_writers(spark, tmp_path):
         with open(f"{d}/.update_lock", "w") as fh:
             fh.write(str(holder.pid))
         with pytest.raises(UpdateInProgress):
-            update_index_incremental(spark, d, batch)
+            update_index_delta(spark, d, batch)
     finally:
         holder.kill()
         holder.wait()
     # the holder died -> stale lock is taken over and the update runs
-    man = update_index_incremental(spark, d, batch)
+    man = update_index_delta(spark, d, batch)
     assert man["num_docs"] == 41
     assert not os.path.exists(f"{d}/.update_lock")
 
@@ -481,7 +410,7 @@ def test_update_lock_empty_record_never_deleted_while_fresh(tmp_path):
 def test_incremental_update_rejects_stale_doc_ids(spark, tmp_path):
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
-        update_index_incremental,
+        update_index_delta,
     )
 
     by_part = _vocab_by_part()
@@ -491,9 +420,7 @@ def test_incremental_update_rejects_stale_doc_ids(spark, tmp_path):
         num_parts=NUM_PARTS, chunk_postings=CHUNK,
     )
     with pytest.raises(ValueError, match="fresh doc_ids"):
-        update_index_incremental(
-            spark, d, _mk_docs(spark, [(5, "t000 collides")])
-        )
+        update_index_delta(spark, d, _mk_docs(spark, [(5, "t000 collides")]))
 
 
 def _corpus_delta(by_part, base=40, n=24):
@@ -514,14 +441,12 @@ def _corpus_delta(by_part, base=40, n=24):
 def test_delta_update_rank_identical_and_o_batch(spark, tmp_path):
     """LSM delta-segment update: queries over base+delta segments are
     rank-identical to a full rebuild of the union, the base index
-    parts' files are NOT rewritten (O(batch) — the whole point), and
-    the in-place incremental path refuses while deltas live."""
+    parts' files are NOT rewritten (O(batch) — the whole point)."""
     import os
 
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
         update_index_delta,
-        update_index_incremental,
     )
 
     by_part = _vocab_by_part()
@@ -554,9 +479,6 @@ def test_delta_update_rank_identical_and_o_batch(spark, tmp_path):
     for mode in ("taat", "blockmax", "ranked_or", "wand"):
         assert _ranked(spark, d, qs, mode) == _ranked(spark, full_dir, qs, mode)
     assert _docpart(spark, d, qs) == _docpart(spark, full_dir, qs)
-
-    with pytest.raises(ValueError, match="delta segments"):
-        update_index_incremental(spark, d, _mk_docs(spark, [(300, "t000")]))
 
 
 def test_mutation_refreshes_stale_cached_scans(spark, tmp_path):
@@ -749,15 +671,14 @@ def test_delta_update_per_segment_models_absorb_drift(spark, tmp_path):
 
 def test_delta_compaction_restores_single_segment_layout(spark, tmp_path):
     """compact_index folds deltas back: delta part dirs disappear from
-    staging and index, bpp returns to a fresh rebuild's value, queries
-    stay rank-identical, and the in-place path works again."""
+    staging and index, bpp returns to a fresh rebuild's value, and
+    queries stay rank-identical."""
     import os
 
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
         compact_index,
         update_index_delta,
-        update_index_incremental,
     )
 
     by_part = _vocab_by_part()
@@ -784,16 +705,12 @@ def test_delta_compaction_restores_single_segment_layout(spark, tmp_path):
     for mode in ("taat", "blockmax"):
         assert _ranked(spark, d, qs, mode) == _ranked(spark, full_dir, qs, mode)
 
-    # in-place updates are legal again after compaction
-    m = update_index_incremental(spark, d, _mk_docs(spark, [(300, "t000 t001")]))
-    assert m["num_docs"] == 65
-
 
 def test_streaming_delta_mode_folds_segments(spark, tmp_path):
-    """mode="delta": every streamed micro-batch becomes an O(batch)
-    delta segment (own models), retrieval across segments is
-    rank-identical to a batch rebuild, and a later compaction folds
-    everything back to the single-segment layout."""
+    """Every streamed micro-batch becomes an O(batch) delta segment
+    (own models), retrieval across segments is rank-identical to a
+    batch rebuild, and a later compaction folds everything back to the
+    single-segment layout."""
     import json
 
     from partitioned_ef_ans_spark.index.checkpoint import (
@@ -820,7 +737,7 @@ def test_streaming_delta_mode_folds_segments(spark, tmp_path):
         spark.createDataFrame(
             [(d, t) for d, t in wave], "doc_id long, content string"
         ).write.mode("append").parquet(inp)
-        start_index_update_stream(spark, inp, inc_dir, ckpt, mode="delta")
+        start_index_update_stream(spark, inp, inc_dir, ckpt)
     man = json.load(open(f"{inc_dir}/manifest.json"))
     assert man["delta_segments"] == 2
 
@@ -848,9 +765,7 @@ def test_streaming_delta_mode_folds_segments(spark, tmp_path):
         spark.createDataFrame(
             wave, "doc_id long, content string"
         ).write.mode("append").parquet(inp)
-        start_index_update_stream(
-            spark, inp, inc_dir, ckpt, mode="delta", max_segments=1
-        )
+        start_index_update_stream(spark, inp, inc_dir, ckpt, max_segments=1)
     man = json.load(open(f"{inc_dir}/manifest.json"))
     assert man["delta_segments"] == 1
     assert man.get("minor_compactions", 0) >= 1
@@ -916,14 +831,13 @@ def test_delta_manifest_lag_never_reuses_segment(spark, tmp_path):
     """Crash window: a delta committed its doc stats but died before
     the manifest refresh, leaving ``delta_segments`` lagging.  The
     next delta must reconcile the counter from DISK and open a new
-    segment (not overwrite the committed one); the in-place path must
-    refuse on disk truth; an all-stale replay re-arms the manifest."""
+    segment (not overwrite the committed one); an all-stale replay
+    re-arms the manifest."""
     import os
 
     from partitioned_ef_ans_spark.index.checkpoint import (
         build_index_resumable,
         update_index_delta,
-        update_index_incremental,
     )
 
     by_part = _vocab_by_part()
@@ -943,10 +857,6 @@ def test_delta_manifest_lag_never_reuses_segment(spark, tmp_path):
             json.dump(man, fh)
 
     regress()
-    # in-place path refuses on DISK truth even with the counter at 0
-    with pytest.raises(ValueError, match="delta segments"):
-        update_index_incremental(spark, d, _mk_docs(spark, [(900, "t000")]))
-
     rows_c = _corpus_delta(by_part, base=200, n=8)
     m2 = update_index_delta(spark, d, _mk_docs(spark, rows_c))
     assert m2["delta_segments"] == 2  # disk-reconciled, segment 1 kept
@@ -1281,9 +1191,10 @@ def _fold_state(spark, d):
     manifest's corpus scalars and size totals."""
     import pickle
 
-    def rows(name, *cols):
-        df = spark.read.parquet(f"{d}/{name}")
-        return sorted(tuple(r) for r in (df.select(*cols) if cols else df).collect())
+    def rows(name):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(f"{d}/{name}").collect()
+        )
 
     with open(f"{d}/models.pkl", "rb") as fh:
         side = pickle.load(fh)
@@ -1297,13 +1208,7 @@ def _fold_state(spark, d):
         "staging": rows("staging_postings.parquet"),
         "index": rows("index.parquet"),
         "doc_stats": rows("doc_stats.parquet"),
-        # cf and num_chunks are term_stats' first-chunk diagnostics: for
-        # a term with base and delta chunks, which segment's value
-        # comes first depends on the aggregate's shuffle order
-        "term_stats": rows(
-            "term_stats.parquet",
-            "term", "df", "max_term_weight", "postings", "payload_bytes",
-        ),
+        "term_stats": rows("term_stats.parquet"),
         "models": pickle.dumps(
             (side.get("delta_models"), side.get("delta_universes"))
         ),
