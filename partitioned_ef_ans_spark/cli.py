@@ -303,7 +303,6 @@ def cmd_update_index(args) -> int:
         "num_docs": man["num_docs"],
         "total_postings": man["total_postings"],
         "bits_per_posting": round(man["bits_per_posting"], 3),
-        "parts_reencoded": man.get("parts_reencoded"),
         "delta_segments": man.get("delta_segments"),
         "auto_minor_compacted": man.get("auto_minor_compacted"),
         "update_sec": man.get("update_sec"),

@@ -592,7 +592,7 @@ def kernel_maxscore_blockmax(
 def run_blockmax_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
     num_docs: int,
     avg_len: float,
@@ -635,13 +635,19 @@ def run_blockmax_docpartitioned(
     O(touched index bytes + Σ query-term partials), independent of
     how many queries share a term — the shape a 100 TB batch runs.
 
-    Upper bounds use the frozen term_stats (never an index aggregate);
-    SQL-computed bound components carry a 1e-9 relative inflation so
-    cross-engine 1-ulp drift cannot make a bound inadmissible.
+    ``queries`` is a (query_id, terms) frame or an already-built
+    :class:`~partitioned_ef_ans_spark.index.query.QueryPlan`.  The
+    bound components (qw, each term's contribution qw *
+    max_term_weight, each query's strongest term and total) are
+    computed on the driver from the plan's frozen term_stats rows
+    (never an index aggregate), with the same ``_q_weight`` doubles
+    the partials score with; they carry a 1e-9 relative inflation so
+    summation-order drift cannot make a bound inadmissible.
     Rank-identical to ranked_or (same argument as kernel_blockmax).
     """
+    import pyarrow as pa
+
     from partitioned_ef_ans_spark.index import query as q
-    from partitioned_ef_ans_spark.operators.ranked import query_freqs
     from partitioned_ef_ans_spark.session import ship_package
     from pyspark.sql.window import Window
 
@@ -650,38 +656,27 @@ def run_blockmax_docpartitioned(
     ship_package(spark)
     codec_bc = q.codec_broadcast(spark, codec)
     bs = codec.block_size
+    plan = q.as_plan(queries, term_stats_df)
 
-    qf = query_freqs(queries_df)  # query_id, term, qtf, n_terms
-    qw_expr = (
-        F.col("qtf").cast("double")
-        * F.greatest(
-            F.lit(float(bm25.EPSILON_SCORE)),
-            F.log(
-                (F.lit(float(num_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        * F.lit(1.0 + float(bm25.K1))
-    )
-    qstats = (
-        term_stats_df.join(F.broadcast(qf), "term")
-        .withColumn("qw", qw_expr)
-        .withColumn(
-            "contrib",
-            F.col("qw") * F.col("max_term_weight") * (1.0 + 1e-9) + 1e-12,
-        )
-    )
+    # per query: its in-vocabulary (term, qtf, qw, contrib) rows
+    qrows = {}
+    for qid, c in plan.queries:
+        rows = []
+        for t, f in c.items():
+            if t in plan.stats:
+                mw, df_, _ = plan.stats[t]
+                qw = q._q_weight(f, df_, num_docs, np.float64)
+                rows.append((t, f, qw, qw * float(mw) * (1.0 + 1e-9) + 1e-12))
+        if rows:
+            qrows[qid] = rows
+    # strongest term: contrib desc, term asc
+    strongest = {
+        qid: min(rows, key=lambda r: (-r[3], r[0])) for qid, rows in qrows.items()
+    }
 
     # ---- stage 1: per-term k-th doc-side weight over strongest terms
-    w_str = Window.partitionBy("query_id").orderBy(
-        F.desc("contrib"), F.asc("term")
-    )
-    strongest = (
-        qstats.withColumn("r", F.row_number().over(w_str))
-        .where(F.col("r") == 1)
-        .select("query_id", "term", "qw")
-    )
-    s_rows = index_df.join(
-        F.broadcast(strongest.select("term").distinct()), "term"
+    s_rows = index_df.where(
+        F.col("term").isin(sorted({r[0] for r in strongest.values()}))
     ).select("term", "chunk_id", "payload", "doc_lens")
 
     def term_top_dw(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -715,34 +710,46 @@ def run_blockmax_docpartitioned(
             )
 
     w_tau = Window.partitionBy("term").orderBy(F.desc("dw"))
-    kth_dw = (
+    kth_dw = dict(
         s_rows.mapInPandas(term_top_dw, schema="term string, dw double")
         .withColumn("r", F.row_number().over(w_tau))
         .where(F.col("r") == k)
-        .select("term", F.col("dw").alias("dwk"))
-    )
-    # lists shorter than k have no k-th weight -> no tau row -> -inf
-    taus = strongest.join(kth_dw, "term").select(
-        "query_id", (F.col("qw") * F.col("dwk") - TAU_MARGIN).alias("tau")
-    )
+        .select("term", "dw")
+        .collect()
+    ) if strongest else {}
 
     # ---- stage 2: one row per (term, chunk); referencing queries ride
-    # along as a broadcast-joined array
-    totals = qstats.groupBy("query_id").agg(F.sum("contrib").alias("total"))
-    qmeta = (
-        qstats.join(F.broadcast(totals), "query_id")
-        .join(F.broadcast(taus), "query_id", "left")
-        .withColumn("tau", F.coalesce(F.col("tau"), F.lit(float("-inf"))))
+    # along as a driver-built Arrow local relation.  Lists shorter than
+    # k have no k-th weight -> tau = -inf
+    by_term: dict = {}
+    for qid, rows in qrows.items():
+        s_term, _, s_qw, _ = strongest[qid]
+        dwk = kth_dw.get(s_term)
+        tau = s_qw * dwk - TAU_MARGIN if dwk is not None else float("-inf")
+        total = sum(r[3] for r in rows)
+        for t, f, qw, contrib in rows:
+            by_term.setdefault(t, []).append({
+                "query_id": qid, "qtf": f, "qw": qw, "contrib": contrib,
+                "total": total, "tau": tau,
+            })
+    q_type = pa.struct([
+        ("query_id", pa.int64()), ("qtf", pa.int32()), ("qw", pa.float64()),
+        ("contrib", pa.float64()), ("total", pa.float64()), ("tau", pa.float64()),
+    ])
+    qlist = spark.createDataFrame(pa.Table.from_pylist(
+        [
+            {"term": t, "qs": v, "df": plan.stats[t][1]}
+            for t, v in sorted(by_term.items())
+        ],
+        pa.schema([
+            ("term", pa.string()), ("qs", pa.list_(q_type)),
+            ("df", plan.types[1]),
+        ]),
+    ))
+    joined = (
+        index_df.drop("df").where(plan.term_filter())
+        .join(F.broadcast(qlist), "term")
     )
-    qlist = qmeta.groupBy("term").agg(
-        # df is term-level (authoritative term_stats value, identical
-        # on every row of the group)
-        F.max("df").alias("df"),
-        F.collect_list(
-            F.struct("query_id", "qtf", "qw", "contrib", "total", "tau")
-        ).alias("qs"),
-    )
-    joined = index_df.drop("df").join(F.broadcast(qlist), "term")
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         codec_l = codec_bc.value

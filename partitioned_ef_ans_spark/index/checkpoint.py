@@ -1585,7 +1585,7 @@ def update_index_delta(
                         "delta_segments": committed,
                     },
                 )
-            return {**man, "update_sec": 0.0, "parts_reencoded": 0}
+            return {**man, "update_sec": 0.0}
         ids = lens.column("doc_id").to_numpy()
         doc_lens = lens.column("doc_len").to_numpy()
         if old_max is not None and int(ids.min()) <= int(old_max):
@@ -1706,7 +1706,6 @@ def update_index_delta(
             universe=universe,
             delta_segments=seg,
             update_sec=round(time.perf_counter() - t0, 3),
-            parts_reencoded=0,
         ),
     )
 
@@ -2160,19 +2159,15 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     recs = {}
     for pid in range(num_parts):
         t_part = time.perf_counter()
-        idx_dir = f"{sc_index}/part={pid}"
-        enc = staged_new.where(F.col("part_id") == pid).drop("part_id").mapInPandas(
-            b_mod._encode_factory(codec_bc, avg_len), schema=b_mod.INDEX_SCHEMA
+        postings, nbytes = _encode_to(
+            staged_new.where(F.col("part_id") == pid).drop("part_id"),
+            codec_bc, avg_len, f"{sc_index}/part={pid}",
         )
-        enc.write.mode("overwrite").parquet(idx_dir)
-        stats_row = spark.read.parquet(idx_dir).agg(
-            F.sum("n").alias("postings"), F.sum(F.length("payload")).alias("bytes")
-        ).collect()[0]
         recs[pid] = {
             "part_id": pid,
             "lineage": _lineage(spark, staged_new, pid),
-            "postings": int(stats_row["postings"] or 0),
-            "payload_bytes": int(stats_row["bytes"] or 0),
+            "postings": postings,
+            "payload_bytes": nbytes,
             "elapsed_sec": round(time.perf_counter() - t_part, 3),
             "codec": codec,
             "avg_len_at_encode": avg_len,
@@ -2190,20 +2185,14 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     # write at all
     total_new = spark.read.parquet(sc_index)
     b_mod.term_stats_agg(total_new).write.mode("overwrite").parquet(sc_tstats)
-    agg = spark.read.parquet(sc_tstats).agg(
-        F.sum("postings").alias("postings"), F.sum("payload_bytes").alias("bytes")
-    ).collect()[0]
     man_new = dict(man)
     man_new.update(
         num_docs=num_docs,
         avg_doc_len=avg_len,
-        total_postings=int(agg["postings"] or 0),
-        payload_bytes=int(agg["bytes"] or 0),
-        bits_per_posting=int(agg["bytes"] or 0) * 8 / int(agg["postings"] or 1),
+        **_ckpt_totals(recs),
         universe=universe,
         compactions=int(man.get("compactions", 0)) + 1,
         compact_sec=round(time.perf_counter() - t0, 3),
-        parts_reencoded=num_parts,
         delta_segments=0,
         docs_purged=int(man.get("docs_purged", 0)) + (
             int(srow_all["n"]) - num_docs if tombs is not None else 0

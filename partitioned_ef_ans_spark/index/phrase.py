@@ -76,7 +76,8 @@ def phrase_matches(
     docs_df: DataFrame | None = None,
     text_col: str = "text",
     n: int = 2,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tombstones=None,
     allowlist=None,
 ) -> DataFrame:
@@ -131,7 +132,8 @@ def run_phrase_ranked(
     k: int = 10,
     dtype: str = "float64",
     n: int = 2,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tombstones=None,
     allowlist=None,
 ) -> DataFrame:

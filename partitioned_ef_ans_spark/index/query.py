@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 from partitioned_ef_ans_spark.codecs import blocks
 from partitioned_ef_ans_spark.functions import bm25
-from partitioned_ef_ans_spark.operators.ranked import query_freqs
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 COUNT_SCHEMA = "query_id long, matches long"
@@ -1099,16 +1098,19 @@ def make_bool_kernel(codec_bc, conjunctive, tomb_bc=None):
 class QueryPlan:
     """A query batch planned on the driver: per query, its term
     multiset (``Counter`` — duplicate terms fold into ``qtf`` and
-    ``n_terms`` counts distinct terms, the reference's query_freqs,
-    queries.hpp:139-153), plus the frozen term_stats row of every
+    ``n_terms`` counts distinct terms, as the reference folds query
+    terms, queries.hpp:139-153), plus the frozen term_stats row of every
     referenced in-vocabulary term.
 
-    Query batches are a few KB, and every exchange of a Spark-planned
-    query side costs a scheduler round trip per serving call; planned
-    here, the only Spark work is one filtered term_stats collect, and
-    the plan reaches the gather join as Arrow-built local relations
-    (``LocalTableScan`` — collecting or broadcasting one schedules no
-    scan of its own)."""
+    This is the only query-side planner of the serving paths: the
+    gather runners and every doc-partitioned twin take a plan (or plan
+    a DataFrame batch into one), and giant-query routing splits the
+    plan instead of re-planning.  Query batches are a few KB, and
+    every exchange of a Spark-planned query side costs a scheduler
+    round trip per serving call; planned here, the only Spark work is
+    one filtered term_stats collect, and the plan reaches the index
+    join as Arrow-built local relations (``LocalTableScan`` —
+    collecting or broadcasting one schedules no scan of its own)."""
 
     def __init__(self, queries, stats, types):
         self.queries = queries  # [(query_id, Counter{term: qtf})]
@@ -1121,10 +1123,12 @@ class QueryPlan:
         terms = sorted({t for _, c in self.queries for t in c if t in self.stats})
         return F.col("term").isin(terms) if terms else F.lit(False)
 
-    def giant_ids(self, budget_bytes: int) -> list[int]:
+    def giant_ids(self, budget_bytes: int | None) -> list[int]:
         """Query ids whose referenced compressed payload (frozen
         term_stats bytes, summed over distinct terms) exceeds
-        ``budget_bytes``."""
+        ``budget_bytes`` (``None`` routes nothing)."""
+        if budget_bytes is None:
+            return []
         return [
             q for q, c in self.queries
             if sum(self.stats[t][2] or 0 for t in c if t in self.stats)
@@ -1138,17 +1142,6 @@ class QueryPlan:
             QueryPlan([x for x in self.queries if x[0] in ids], self.stats, self.types),
             QueryPlan([x for x in self.queries if x[0] not in ids], self.stats, self.types),
         )
-
-    def queries_frame(self, spark) -> DataFrame:
-        """(query_id, terms) local relation for runners that plan their
-        query side in Spark (the docpart twins)."""
-        return spark.createDataFrame(pa.table({
-            "query_id": pa.array([q for q, _ in self.queries], pa.int64()),
-            "terms": pa.array(
-                [list(c.elements()) for _, c in self.queries],
-                pa.list_(pa.string()),
-            ),
-        }))
 
     def side_frame(self, spark) -> DataFrame:
         """One row per (query, in-vocabulary term): (term, query_id,
@@ -1220,6 +1213,17 @@ def plan_queries(
     return QueryPlan(list(per_q.items()), stats, types)
 
 
+def as_plan(
+    queries: "DataFrame | QueryPlan", term_stats_df: DataFrame,
+    distinct: bool = False,
+) -> QueryPlan:
+    """``queries`` itself when it is already planned, else
+    :func:`plan_queries` of the (query_id, terms) frame."""
+    if isinstance(queries, QueryPlan):
+        return queries
+    return plan_queries(queries, term_stats_df, distinct)
+
+
 def codec_broadcast(spark, codec):
     """Per-(context, codec) broadcast memo.  The ANS codec bundle
     pickles at ~11 MB (enc/dec tables); a fresh ``sc.broadcast`` per
@@ -1240,7 +1244,7 @@ def codec_broadcast(spark, codec):
 def query_lists_df(
     index_df: DataFrame,
     queries: "DataFrame | QueryPlan",
-    term_stats_df: DataFrame | None = None,
+    term_stats_df: DataFrame,
 ) -> DataFrame:
     """Join the (broadcast) query term multiset into the index table —
     only referenced chunks survive (the term filter reaches the parquet
@@ -1252,41 +1256,21 @@ def query_lists_df(
     driver (:func:`plan_queries`, or an already-built
     :class:`QueryPlan`), so a serving call's plan is one broadcast
     hash join of a local relation + the gather exchange and a batch
-    never scans or aggregates the index itself.  The ``None`` fallback
-    (full-index groupBy) exists only for ad-hoc index DataFrames
-    without a frozen sidecar — never the scale path.
+    never scans or aggregates the index itself.
     """
+    plan = as_plan(queries, term_stats_df)
     # the chunk-row df is frozen at its SEGMENT's build and goes stale
     # when a term's list spans base + delta segments — every consumer
     # gets the authoritative term-level df (== list length) instead
-    if term_stats_df is not None:
-        plan = (
-            queries if isinstance(queries, QueryPlan)
-            else plan_queries(queries, term_stats_df)
-        )
-        return (
-            index_df.drop("df")
-            .where(plan.term_filter())
-            .join(F.broadcast(plan.side_frame(index_df.sparkSession)), "term")
-            .withColumnRenamed("term_df", "df")
-        )
-    qf = query_freqs(queries)  # query_id, term, qtf, n_terms
-    per_term_max = index_df.groupBy("term").agg(
-        F.max("chunk_max_weight").alias("max_weight"),
-        F.sum("n").cast("long").alias("term_df"),
-    )
-    idx = index_df.drop("df").join(F.broadcast(qf), "term")
     return (
-        idx.join(F.broadcast(per_term_max), "term")
+        index_df.drop("df")
+        .where(plan.term_filter())
+        .join(F.broadcast(plan.side_frame(index_df.sparkSession)), "term")
         .withColumnRenamed("term_df", "df")
     )
 
 
-def batched_query_lists_df(
-    index_df: DataFrame,
-    queries_df: DataFrame,
-    term_stats_df: DataFrame | None = None,
-) -> DataFrame:
+def batched_query_lists_df(index_df: DataFrame, plan: QueryPlan) -> DataFrame:
     """One row per referenced (term, chunk); the referencing queries
     ride along as a broadcast-joined struct array ``qs`` of
     (query_id, qtf, n_terms), plus the authoritative term-level ``df``.
@@ -1296,30 +1280,13 @@ def batched_query_lists_df(
     query batch moves Σ_q(referenced bytes) through Arrow and decodes
     head chunks once per query.  This batch twin moves every touched
     chunk exactly once regardless of batch size: the shape the
-    doc-partitioned runners use.  The query side is driver-planned
-    exactly like :func:`query_lists_df`.
+    doc-partitioned runners use.  ``plan`` is the caller's driver-built
+    :class:`QueryPlan`, so no term_stats row is fetched twice.
     """
-    if term_stats_df is not None:
-        plan = plan_queries(queries_df, term_stats_df)
-        return (
-            index_df.drop("df")
-            .where(plan.term_filter())
-            .join(F.broadcast(plan.batched_frame(index_df.sparkSession)), "term")
-        )
-    qf = query_freqs(queries_df)
-    qterms = qf.select("term").distinct()
-    per_term = (
-        index_df.join(F.broadcast(qterms), "term", "left_semi")
-        .groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"))
-    )
-    qlist = qf.groupBy("term").agg(
-        F.collect_list(F.struct("query_id", "qtf", "n_terms")).alias("qs")
-    )
     return (
         index_df.drop("df")
-        .join(F.broadcast(qlist), "term")
-        .join(F.broadcast(per_term), "term")
+        .where(plan.term_filter())
+        .join(F.broadcast(plan.batched_frame(index_df.sparkSession)), "term")
     )
 
 
@@ -1398,7 +1365,8 @@ def run_ranked(
     mode: str = "blockmax",
     k: int = 10,
     dtype: str = "float64",
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     docpart_budget_bytes: int | None = DOCPART_DISPATCH_BUDGET_BYTES,
     tombstones=None,
     allowlist=None,
@@ -1441,10 +1409,7 @@ def run_ranked(
         # block-selective kernel's advantage grows with scale (2.7x
         # at 144.5M).  The memoized payload scalar makes this free.
         mode = "maxscore_blockmax"
-        if term_stats_df is not None and (
-            _total_payload_bytes(term_stats_df)
-            <= PROBE_EXHAUSTIVE_BUDGET_BYTES
-        ):
+        if _total_payload_bytes(term_stats_df) <= PROBE_EXHAUSTIVE_BUDGET_BYTES:
             mode = "ranked_or"
     if codec.docs is None and mode in ("blockmax", "maxscore_blockmax"):
         mode = "taat"
@@ -1452,35 +1417,29 @@ def run_ranked(
         mode = "wand"  # EF families carry no intra-list block maxima
 
     # plan the batch once; giant-query routing splits the planned rows
-    qside, routed = queries_df, None
-    if term_stats_df is not None:
-        qside = plan_queries(queries_df, term_stats_df)
-        big = (
-            qside.giant_ids(docpart_budget_bytes)
-            if docpart_budget_bytes is not None else []
-        )
-        if big:
-            from partitioned_ef_ans_spark.index import blockmax as bmx
+    qside, routed = plan_queries(queries_df, term_stats_df), None
+    big = qside.giant_ids(docpart_budget_bytes)
+    if big:
+        from partitioned_ef_ans_spark.index import blockmax as bmx
 
-            big_plan, qside = qside.split(big)
-            big_df = big_plan.queries_frame(spark)
-            if mode == "ranked_and":
-                # conjunctive twin: per-chunk partials + distinct-term
-                # match-count filter (never the union-scoring paths)
-                routed = run_ranked_and_docpartitioned(
-                    spark, index_df, big_df, codec, num_docs, avg_len, k=k,
-                    term_stats_df=term_stats_df, tomb_bc=tomb_bc,
-                )
-            elif mode in ("blockmax", "maxscore_blockmax") and codec.docs is not None:
-                routed = bmx.run_blockmax_docpartitioned(
-                    spark, index_df, big_df, codec, num_docs, avg_len,
-                    term_stats_df, k=k, tomb_bc=tomb_bc,
-                )
-            else:
-                routed = run_ranked_docpartitioned(
-                    spark, index_df, big_df, codec, num_docs, avg_len, k=k,
-                    term_stats_df=term_stats_df, tomb_bc=tomb_bc,
-                )
+        big_plan, qside = qside.split(big)
+        if mode == "ranked_and":
+            # conjunctive twin: per-chunk partials + distinct-term
+            # match-count filter (never the union-scoring paths)
+            routed = run_ranked_and_docpartitioned(
+                spark, index_df, big_plan, codec, num_docs, avg_len, k=k,
+                term_stats_df=term_stats_df, tomb_bc=tomb_bc,
+            )
+        elif mode in ("blockmax", "maxscore_blockmax") and codec.docs is not None:
+            routed = bmx.run_blockmax_docpartitioned(
+                spark, index_df, big_plan, codec, num_docs, avg_len,
+                term_stats_df, k=k, tomb_bc=tomb_bc,
+            )
+        else:
+            routed = run_ranked_docpartitioned(
+                spark, index_df, big_plan, codec, num_docs, avg_len, k=k,
+                term_stats_df=term_stats_df, tomb_bc=tomb_bc,
+            )
 
     codec_bc = codec_broadcast(spark, codec)
     joined = query_lists_df(index_df, qside, term_stats_df)
@@ -1494,11 +1453,12 @@ def run_ranked(
 def ranked_scores_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
     num_docs: int,
     avg_len: float,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
 ) -> DataFrame:
     """Document-partitioned exhaustive BM25 (the second parallelism
@@ -1525,7 +1485,7 @@ def ranked_scores_docpartitioned(
 
     ship_package(spark)
     codec_bc = codec_broadcast(spark, codec)
-    joined = batched_query_lists_df(index_df, queries_df, term_stats_df)
+    joined = batched_query_lists_df(index_df, as_plan(queries, term_stats_df))
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from partitioned_ef_ans_spark.index.build import decode_lists_segmented
@@ -1628,12 +1588,13 @@ def topk_per_query(per_doc: DataFrame, k: int) -> DataFrame:
 def run_ranked_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
     num_docs: int,
     avg_len: float,
     k: int = 10,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
 ) -> DataFrame:
     """Global top-k over ``ranked_scores_docpartitioned`` (partial
@@ -1641,7 +1602,7 @@ def run_ranked_docpartitioned(
     ranked_or/WAND/taat under the gate's comparison discipline
     (rounded scores, doc_id tie-break)."""
     per_doc = ranked_scores_docpartitioned(
-        spark, index_df, queries_df, codec, num_docs, avg_len,
+        spark, index_df, queries, codec, num_docs, avg_len,
         term_stats_df=term_stats_df, tomb_bc=tomb_bc,
     )
     return topk_per_query(per_doc, k)
@@ -1699,7 +1660,8 @@ def run_ranked_collapsed(
     avg_len: float,
     groups_df: DataFrame,
     k: int = 10,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
     tombstones=None,
     allowlist=None,
@@ -1893,12 +1855,13 @@ def run_ranked_collapsed(
 def run_ranked_and_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
     num_docs: int,
     avg_len: float,
     k: int = 10,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
 ) -> DataFrame:
     """Document-partitioned CONJUNCTIVE BM25 — the ranked_and twin of
@@ -1914,7 +1877,7 @@ def run_ranked_and_docpartitioned(
 
     ship_package(spark)
     codec_bc = codec_broadcast(spark, codec)
-    joined = batched_query_lists_df(index_df, queries_df, term_stats_df)
+    joined = batched_query_lists_df(index_df, as_plan(queries, term_stats_df))
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from partitioned_ef_ans_spark.index.build import decode_lists_segmented
@@ -1976,9 +1939,9 @@ def run_ranked_and_docpartitioned(
             F.count_distinct("term").alias("nt_hit"),
             F.first("n_terms").alias("n_terms"),
         )
-        # conjunctive: drop docs missing ANY query term (duplicate
-        # query terms were already folded into qtf by query_freqs, so
-        # n_terms here counts DISTINCT terms)
+        # conjunctive: drop docs missing ANY query term (the plan
+        # folded duplicate query terms into qtf, so n_terms counts
+        # DISTINCT terms, OOV ones included)
         .where(F.col("nt_hit") == F.col("n_terms"))
     )
     return topk_per_query(per_doc, k)
@@ -1987,10 +1950,11 @@ def run_ranked_and_docpartitioned(
 def run_boolean_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
     conjunctive: bool,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
 ) -> DataFrame:
     """Document-partitioned boolean match counting — the gather-free
@@ -1999,7 +1963,7 @@ def run_boolean_docpartitioned(
     counts.  Zero-match queries emit no row, exactly like the kernel
     path."""
     matches = boolean_matches_docpartitioned(
-        spark, index_df, queries_df, codec, conjunctive,
+        spark, index_df, queries, codec, conjunctive,
         term_stats_df=term_stats_df, tomb_bc=tomb_bc,
     )
     return matches.groupBy("query_id").agg(
@@ -2010,9 +1974,10 @@ def run_boolean_docpartitioned(
 def boolean_match_rows_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
 ) -> DataFrame:
     """The raw per-term match relation ``(query_id, term, n_terms,
@@ -2029,8 +1994,9 @@ def boolean_match_rows_docpartitioned(
 
     ship_package(spark)
     codec_bc = codec_broadcast(spark, codec)
-    qdf = queries_df.select("query_id", F.array_distinct("terms").alias("terms"))
-    joined = batched_query_lists_df(index_df, qdf, term_stats_df)
+    joined = batched_query_lists_df(
+        index_df, as_plan(queries, term_stats_df, distinct=True)
+    )
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from partitioned_ef_ans_spark.index.build import decode_lists_segmented
@@ -2084,10 +2050,11 @@ def boolean_match_rows_docpartitioned(
 def boolean_matches_docpartitioned(
     spark,
     index_df: DataFrame,
-    queries_df: DataFrame,
+    queries: "DataFrame | QueryPlan",
     codec,
     conjunctive: bool,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tomb_bc=None,
 ) -> DataFrame:
     """The DISTRIBUTED boolean match set ``(query_id, doc_id)`` — one
@@ -2096,7 +2063,7 @@ def boolean_matches_docpartitioned(
     for OR; docs hit by every distinct query term for AND).  This is
     the substrate count/facet/export consumers aggregate further."""
     rows = boolean_match_rows_docpartitioned(
-        spark, index_df, queries_df, codec,
+        spark, index_df, queries, codec,
         term_stats_df=term_stats_df, tomb_bc=tomb_bc,
     )
     if conjunctive:
@@ -2118,7 +2085,8 @@ def run_boolean(
     queries_df: DataFrame,
     codec,
     conjunctive: bool,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     docpart_budget_bytes: int | None = DOCPART_DISPATCH_BUDGET_BYTES,
     tombstones=None,
     allowlist=None,
@@ -2136,23 +2104,13 @@ def run_boolean(
         tombstones = make_allowlist(allowlist, tombstones)
     tomb_bc = _as_tomb_bc(spark, tombstones)
     # boolean ops dedup query terms first (queries.hpp:30-34)
-    routed = None
-    if term_stats_df is not None:
-        qside = plan_queries(queries_df, term_stats_df, distinct=True)
-        big = (
-            qside.giant_ids(docpart_budget_bytes)
-            if docpart_budget_bytes is not None else []
-        )
-        if big:
-            big_plan, qside = qside.split(big)
-            routed = run_boolean_docpartitioned(
-                spark, index_df, big_plan.queries_frame(spark),
-                codec, conjunctive, term_stats_df=term_stats_df,
-                tomb_bc=tomb_bc,
-            )
-    else:
-        qside = queries_df.select(
-            "query_id", F.array_distinct("terms").alias("terms")
+    qside, routed = plan_queries(queries_df, term_stats_df, distinct=True), None
+    big = qside.giant_ids(docpart_budget_bytes)
+    if big:
+        big_plan, qside = qside.split(big)
+        routed = run_boolean_docpartitioned(
+            spark, index_df, big_plan, codec, conjunctive,
+            term_stats_df=term_stats_df, tomb_bc=tomb_bc,
         )
     joined = query_lists_df(index_df, qside, term_stats_df)
     kernel = make_bool_kernel(codec_bc, conjunctive, tomb_bc=tomb_bc)
@@ -2168,7 +2126,8 @@ def facet_counts(
     docs_meta_df: DataFrame,
     facet_col: str,
     conjunctive: bool = False,
-    term_stats_df: DataFrame | None = None,
+    *,
+    term_stats_df: DataFrame,
     tombstones=None,
     allowlist=None,
     top_n: int | None = None,
@@ -2192,11 +2151,8 @@ def facet_counts(
     if allowlist is not None:
         tombstones = make_allowlist(allowlist, tombstones)
     tomb_bc = _as_tomb_bc(spark, tombstones)
-    qdf = queries_df.select(
-        "query_id", F.array_distinct("terms").alias("terms")
-    )
     matches = boolean_matches_docpartitioned(
-        spark, index_df, qdf, codec, conjunctive,
+        spark, index_df, queries_df, codec, conjunctive,
         term_stats_df=term_stats_df, tomb_bc=tomb_bc,
     )
     meta = docs_meta_df.select(

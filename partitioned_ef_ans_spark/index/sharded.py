@@ -204,15 +204,16 @@ def run_ranked_sharded(
     if fetch == "direct":
         from partitioned_ef_ans_spark.index import serve as sv_mod
 
-        # authoritative global df for the batch's terms only (bounded
-        # by the query vocabulary — broadcast-sized by construction)
-        qterms = q_mod.query_freqs(queries_df).select("term").distinct()
+        # authoritative global df for the batch's terms only: the
+        # vocabulary comes from the driver, one filtered collect
+        vocab = sorted({
+            t for r in queries_df.select("terms").collect()
+            for t in r[0] or () if t is not None
+        })
         gmap = {
             r["term"]: int(r["df"])
-            for r in sh["global_df"]
-            .join(F.broadcast(qterms), "term", "left_semi")
-            .collect()
-        }
+            for r in sh["global_df"].where(F.col("term").isin(vocab)).collect()
+        } if vocab else {}
         parts = [
             sv_mod.run_ranked_direct(
                 spark, s["dir"], queries_df, mode=mode, k=k, dtype=dtype,

@@ -134,7 +134,7 @@ def run_ranked_prf(
     m: int = 3,
     mode: str = "blockmax",
     dtype: str = "float32",
-    term_stats_df: DataFrame | None = None,
+    term_stats_df: DataFrame,
     **kw,
 ) -> DataFrame:
     """Two-stage PRF retrieval: (query_id, rank, doc_id, score).
@@ -161,12 +161,10 @@ def run_ranked_prf(
     # are rank- and value-identical (the gate families' guarantee) —
     # so it routes through the measured-crossover auto dispatch
     # exactly like run_ranked_collapsed's probe, regardless of the
-    # caller's stage-2 mode (auto needs term_stats for the crossover
-    # scalar; without it the caller's mode stands).
-    fb_mode = "auto" if term_stats_df is not None else mode
+    # caller's stage-2 mode.
     fb = q_mod.run_ranked(
         spark, index_df, queries_df, codec, num_docs, avg_len,
-        mode=fb_mode, k=int(k_fb), dtype=dtype, term_stats_df=term_stats_df,
+        mode="auto", k=int(k_fb), dtype=dtype, term_stats_df=term_stats_df,
         **kw,
     ).select("query_id", "doc_id").localCheckpoint(eager=True)
     fb_doc_ids = fb.select("doc_id").distinct()

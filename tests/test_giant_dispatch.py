@@ -45,14 +45,9 @@ def test_giant_query_auto_dispatch_blockmax(spark, sf_small, monkeypatch):
     routed: list[list[int]] = []
     orig = bmx.run_blockmax_docpartitioned
 
-    def spy(spark_, index_df, queries_df, *a, **kw):
-        routed.append(
-            sorted(
-                r["query_id"]
-                for r in queries_df.select("query_id").distinct().collect()
-            )
-        )
-        return orig(spark_, index_df, queries_df, *a, **kw)
+    def spy(spark_, index_df, plan, *a, **kw):
+        routed.append(sorted(qid for qid, _ in plan.queries))
+        return orig(spark_, index_df, plan, *a, **kw)
 
     monkeypatch.setattr(bmx, "run_blockmax_docpartitioned", spy)
     out = sorted(
@@ -145,6 +140,49 @@ def test_boolean_dispatch_matches_gather(spark, sf_small, monkeypatch):
         }
         monkeypatch.undo()
         assert routed and got == base
+
+
+#: Spark jobs per call with every gate query routed to its docpart
+#: twin (``docpart_budget_bytes=1``), gate sf0.001 index; the twins
+#: that planned their own query side in Spark ran 19 / 19 / 6 / 7
+#: (ranked) and 7 / 6 (boolean)
+ROUTED_JOBS = {
+    "blockmax": 7, "maxscore_blockmax": 7, "ranked_or": 5, "ranked_and": 6,
+    "bool_and": 6, "bool_or": 5,
+}
+
+
+def test_routed_call_job_counts(spark, sf_small):
+    """Routed legs run on the driver-built plan: no second term_stats
+    collect, and blockmax's bound components and tau join come from
+    the driver instead of Spark windows, groupBys and joins."""
+    from test_term_stats_plan import _count_jobs
+
+    from partitioned_ef_ans_spark.index import query as q_mod
+
+    ix, qdf = _baseline_and_index(spark, sf_small)
+
+    def ranked(mode):
+        return lambda: q_mod.run_ranked(
+            spark, ix["index_df"], qdf, ix["codec"], ix["num_docs"],
+            ix["avg_len"], mode=mode, k=10, dtype="float64",
+            term_stats_df=ix["term_stats"], docpart_budget_bytes=1,
+        ).collect()
+
+    def boolean(conj):
+        return lambda: q_mod.run_boolean(
+            spark, ix["index_df"], qdf, ix["codec"], conj,
+            term_stats_df=ix["term_stats"], docpart_budget_bytes=1,
+        ).collect()
+
+    ranked("blockmax")()  # first-call set-up (codec broadcast, package ship)
+    calls = {m: ranked(m) for m in ROUTED_JOBS if not m.startswith("bool")}
+    calls.update(bool_and=boolean(True), bool_or=boolean(False))
+    got = {
+        name: _count_jobs(spark, f"pefa_routed_{name}", fn)
+        for name, fn in calls.items()
+    }
+    assert all(got[name] <= n for name, n in ROUTED_JOBS.items()), got
 
 
 def test_payload_total_memo_invalidated_by_mutation_epoch(spark, sf_small):

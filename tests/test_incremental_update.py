@@ -692,6 +692,15 @@ def test_delta_compaction_restores_single_segment_layout(spark, tmp_path):
     assert man_b["delta_segments"] == 1  # really took the delta path
     man = compact_index(spark, d)
     assert man["delta_segments"] == 0
+    # manifest size totals (from the encode's own observation) equal a
+    # fresh aggregate over the committed index
+    committed = json.load(open(f"{d}/manifest.json"))
+    fresh = spark.read.parquet(f"{d}/index.parquet").agg(
+        F.sum("n").alias("postings"), F.sum(F.length("payload")).alias("bytes")
+    ).collect()[0]
+    assert (committed["total_postings"], committed["payload_bytes"]) == (
+        fresh["postings"], fresh["bytes"]
+    )
     assert not os.path.exists(f"{d}/index.parquet/part={NUM_PARTS}")
     assert not os.path.exists(f"{d}/staging_postings.parquet/part_id={NUM_PARTS}")
 

@@ -173,10 +173,20 @@ def oracle_inputs(spark, sf_small):
     return tf, stats, p_mod.term_doc_freqs(tf), docs.count()
 
 
-@pytest.mark.parametrize("queries", [[], EDGE_QUERIES], ids=["empty", "edge"])
-def test_planner_edge_cases_match_spark_oracles(spark, built, oracle_inputs, queries):
+@pytest.mark.parametrize(
+    "queries,routed",
+    [([], False), (EDGE_QUERIES, False), ([], True), (EDGE_QUERIES, True)],
+    ids=["empty", "edge", "empty-routed", "edge-routed"],
+)
+def test_planner_edge_cases_match_spark_oracles(
+    spark, built, oracle_inputs, queries, routed
+):
+    """``routed`` serves every query with an in-vocabulary term through
+    its doc-partitioned twin (``docpart_budget_bytes=1``)."""
     from partitioned_ef_ans_spark.index import query as q_mod
     from partitioned_ef_ans_spark.operators import ranked as r_mod
+
+    budget = 1 if routed else q_mod.DOCPART_DISPATCH_BUDGET_BYTES
 
     tf, stats, dfs, n_docs = oracle_inputs
     qdf = r_mod.queries_to_df(spark, queries)
@@ -188,7 +198,7 @@ def test_planner_edge_cases_match_spark_oracles(spark, built, oracle_inputs, que
         got = rows(q_mod.run_ranked(
             spark, built["index_df"], qdf, built["codec"], built["num_docs"],
             built["avg_len"], mode=mode, k=10, dtype="float64",
-            term_stats_df=built["term_stats"],
+            term_stats_df=built["term_stats"], docpart_budget_bytes=budget,
         ))
         want = rows(r_mod.ranked_query(
             tf, stats, dfs, qdf, n_docs, k=10, conjunctive=conj
@@ -203,7 +213,7 @@ def test_planner_edge_cases_match_spark_oracles(spark, built, oracle_inputs, que
     for conj in (True, False):
         got = rows(q_mod.run_boolean(
             spark, built["index_df"], qdf, built["codec"], conj,
-            term_stats_df=built["term_stats"],
+            term_stats_df=built["term_stats"], docpart_budget_bytes=budget,
         ))
         assert got == rows(r_mod.boolean_query(tf, qdf, conj)), conj
 
